@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Fixed-work machine-state probe stamped into every Bench artifact
-  * (VERDICT r14 item 6). The workloads are CONSTANTS — never scaled by
-  * core count or env — so the fields of any two artifacts compare
-  * directly; `cpu_mt_s` runs the same fixed work per thread on all
-  * requested threads, so its EXCESS over `cpu_st_s` isolates external
-  * contention (involuntary descheduling) from single-core speed. */
+/** Fixed-work machine-state probe; perfbench stamps it into every
+  * traced run as the `box.*` per-layer metrics. The workloads are
+  * CONSTANTS — never scaled by core count or env — so the fields of any
+  * two runs compare directly; `cpu_mt_s` runs the same fixed work per
+  * thread on all requested threads, so its EXCESS over `cpu_st_s`
+  * isolates external contention (involuntary descheduling) from
+  * single-core speed. */
 object BoxHealth {
 
   // deterministic ALU spin; the xorshift state defeats dead-code

@@ -115,7 +115,9 @@ object Graft {
     * back-fill each other. The cap stays small on purpose (enough to fill
     * the tail, not enough to fight for executors); at cluster scale the
     * same bound applies unchanged. Failures propagate after the pool
-    * drains (the first cause, unwrapped). Single action short-circuits. */
+    * drains (the first cause, unwrapped). An interrupt of the CALLER does
+    * not drain: the outstanding jobs are cancelled and the interrupt
+    * returns to the caller, flag restored. Single action short-circuits. */
   def overlapJobs[T](work: Seq[() => T], threads: Int = 4): Seq[T] =
     if (work.sizeIs <= 1) work.map(_())
     else {
@@ -135,6 +137,12 @@ object Graft {
           catch {
             case e: java.util.concurrent.ExecutionException =>
               Left(Option(e.getCause).getOrElse(e))
+            case e: InterruptedException =>
+              // the caller wants out: waiting for the drain would block
+              // an interrupted thread on jobs nobody will read
+              futs.foreach(_.cancel(true))
+              Thread.currentThread().interrupt()
+              throw e
             case e: Throwable => Left(e)
           }
         }

@@ -129,18 +129,19 @@ object TxLog {
     * at V proves V existed, so fully-expired logs (manifests before a
     * checkpoint deleted) still report — and continue committing from —
     * the right version. */
-  def latestVersion(dir: String): Int =
-    listLog(dir)
+  def latestVersion(dir: String): Int = latestOf(listLog(dir))
+
+  private def latestOf(names: Array[String]): Int =
+    names
       .collect { case ManifestName(d) => d.toInt
                  case CheckpointName(d) => d.toInt }
       .foldLeft(0)(math.max)
 
-  /** Highest checkpoint at or below `upTo`, if any. */
-  private def latestCheckpointVersion(dir: String, upTo: Int): Option[Int] =
-    listLog(dir)
-      .collect { case CheckpointName(d) => d.toInt }
-      .filter(_ <= upTo)
-      .reduceOption(math.max)
+  /** Highest checkpoint at or below `upTo` in a listing, if any. */
+  private def checkpointAtOrBelow(names: Array[String],
+      upTo: Int): Option[Int] =
+    names.collect { case CheckpointName(d) => d.toInt }
+      .filter(_ <= upTo).maxOption
 
   /** The ONE store-specific operation in the whole log protocol: promote
     * `tmp` to `target` iff `target` does not exist, atomically; `tmp` is
@@ -255,97 +256,100 @@ object TxLog {
   private[sources] def claimFor(fs: FileSystem, tmp: Path,
       target: Path): Boolean = claim(fs, tmp, target)
 
+  /** A claim another writer beat to its version slot — the one failure
+    * the optimistic-commit loop ([[retryLostRace]]) answers with a retry.
+    * Still an IllegalStateException with the historical message, so
+    * callers that match on either keep working. */
+  final class LostRace(dir: String, v: Int) extends IllegalStateException(
+    s"txlog: lost the race for version $v of $dir — re-read and retry")
+
   /** Atomically commit a set of file additions/removals; returns the new
-    * version. Fails (IllegalStateException) if another writer won the
-    * version — retry with a fresh read of [[latestVersion]]. */
-  def commit(dir: String, add: Seq[String], remove: Seq[String] = Nil): Int = {
-    val ld = logDir(dir)
-    val fs = fsOf(ld)
-    fs.mkdirs(ld)
-    val v = latestVersion(dir) + 1
-    val target = manifest(dir, v)
-    val tmp = new Path(ld, s".v$v.tmp${System.nanoTime()}")
-    val body = metaHeader() +
-      (add.map(p => s"add\t$p") ++ remove.map(p => s"remove\t$p"))
-        .mkString("", "\n", "\n")
-    val out = fs.create(tmp, false)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (!claim(fs, tmp, target))
-      throw new IllegalStateException(
-        s"txlog: lost the race for version $v of $dir — re-read and retry")
-    v
-  }
+    * version. Fails ([[LostRace]]) if another writer won the version —
+    * retry with a fresh read of [[latestVersion]]. */
+  def commit(dir: String, add: Seq[String], remove: Seq[String] = Nil): Int =
+    commitWithStats(dir, add.map(_ -> None), remove)
 
   /** [[commit]] under optimistic-concurrency retry: on a lost version
     * race, re-reads the log and tries the NEXT version, up to
-    * `maxAttempts` total claims, with a small linear backoff so two
-    * bursty writers interleave instead of thrashing. Any other failure
-    * (missing manifest, I/O error) propagates immediately — retry is
-    * only ever the answer to "someone else took my version number".
-    * This is the helper every multi-writer caller was hand-rolling;
-    * single-writer paths can keep calling [[commit]] directly. */
+    * `maxAttempts` total claims, with randomized backoff so bursty
+    * writers interleave instead of thrashing. Any other failure (missing
+    * manifest, I/O error) propagates immediately — retry is only ever
+    * the answer to "someone else took my version number". Single-writer
+    * paths can keep calling [[commit]] directly. */
   def commitWithRetry(dir: String, add: Seq[String],
-      remove: Seq[String] = Nil, maxAttempts: Int = MaxCommitAttempts): Int = {
+      remove: Seq[String] = Nil, maxAttempts: Int = MaxCommitAttempts): Int =
+    retryLostRace(dir, maxAttempts)(commit(dir, add, remove))
+
+  /** THE optimistic-commit loop — the only place a [[LostRace]] is
+    * caught: re-run `attempt` after a randomized backoff until it claims
+    * a version, failing after `maxAttempts` claims. Every other failure
+    * of an attempt (a refused check, a rewrite conflict, I/O) propagates
+    * at once. */
+  private def retryLostRace[T](dir: String, maxAttempts: Int)(
+      attempt: => T): T = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1: $maxAttempts")
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      try out = commit(dir, add, remove)
+    var n = 1
+    var out: Option[T] = None
+    while (out.isEmpty)
+      try out = Some(attempt)
       catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("lost the race") =>
-          if (attempt >= maxAttempts)
+        case e: LostRace =>
+          if (n >= maxAttempts)
             throw new IllegalStateException(
               s"txlog: still losing the version race after $maxAttempts " +
                 s"attempts on $dir — writer contention needs backpressure", e)
-          raceBackoff(attempt)
+          raceBackoff(n)
+          n += 1
       }
-    }
-    out
+    out.get
   }
 
-  /** Commit for REWRITE transactions (optimize / zorder) — optimistic
-    * retry WITH logical conflict detection, the piece [[commitWithRetry]]
-    * deliberately lacks (ADVICE r10): BEFORE every claim attempt the live
-    * set is re-read, and if any path this rewrite wants to `remove` is no
-    * longer live, a concurrent commit already replaced it — committing
-    * anyway would re-add this writer's compacted copy of rows the winner
-    * kept (a `remove` of an absent path replays as a no-op), duplicating
-    * every row in the snapshot. That case aborts with
-    * [[java.util.ConcurrentModificationException]]: the caller re-runs
-    * its rewrite against the new snapshot.
+  /** [[retryLostRace]] over one [[Snapshot]] per attempt — the shape of
+    * every verb that validates before it commits: `attempt` checks
+    * against the snapshot and claims exactly `snap.version + 1`, so a
+    * commit landing anywhere between the resolution and the claim makes
+    * the claim lose, and the next attempt re-resolves and re-validates.
+    * `first` serves attempt 1 when the verb already resolved (and
+    * validated against) a snapshot; later attempts resolve fresh. */
+  private def withSnapshot[T](dir: String, first: Option[Snapshot] = None,
+      maxAttempts: Int = MaxCommitAttempts)(attempt: Snapshot => T): T = {
+    var pending = first
+    retryLostRace(dir, maxAttempts) {
+      val snap = pending.getOrElse(snapshot(dir))
+      pending = None
+      attempt(snap)
+    }
+  }
+
+  /** Commit for REWRITE transactions (optimize / zorder / row-level DML)
+    * — optimistic retry WITH logical conflict detection, the piece
+    * [[commitWithRetry]] deliberately lacks (ADVICE r10): BEFORE every
+    * claim attempt the snapshot is re-resolved, and if any path this
+    * rewrite wants to `remove` is no longer live, a concurrent commit
+    * already replaced it — committing anyway would re-add this writer's
+    * compacted copy of rows the winner kept (a `remove` of an absent
+    * path replays as a no-op), duplicating every row in the snapshot.
+    * That case aborts with [[java.util.ConcurrentModificationException]]:
+    * the caller re-runs its rewrite against the new snapshot.
     *
     * The pre-attempt check (rather than only after a lost race) also
     * closes the NO-RACE skew: a slow optimizer whose input snapshot went
-    * stale minutes ago commits at a fresh version number without ever
-    * racing anyone — version claims alone would never flag it. The
-    * check-then-claim loop stays sound under TOCTOU because an
-    * invalidating rewrite must COMMIT to win, which bumps the version,
-    * which makes this writer's claim fail, which sends it back through
-    * the check. Concurrent APPENDS remain harmless (their files are not
-    * in `remove`) and cost one retry — the same conflict matrix the
-    * Delta protocol documents for compaction vs append. */
+    * stale minutes ago is checked against the log as it is now. The
+    * claim is pinned to exactly the checked version + 1 (ADVICE r11), so
+    * a commit landing between check and claim makes this claim lose,
+    * which sends it back through the check. Concurrent APPENDS remain
+    * harmless (their files are not in `remove`) and cost one retry — the
+    * same conflict matrix the Delta protocol documents for compaction vs
+    * append. */
   def commitRewrite(dir: String, add: Seq[(String, Option[String])],
       remove: Seq[String], maxAttempts: Int = MaxCommitAttempts,
       dvSets: Seq[(String, Option[String])] = Nil,
       basedOnDvs: Option[Map[String, String]] = None,
       colMap: Option[Seq[(String, String)]] = None,
       colTypes: Seq[(String, Option[String])] = Nil,
-      checkSets: Seq[(String, Option[String])] = Nil): Int = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1: $maxAttempts")
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      // pin the version the whole conflict check resolves against, and
-      // claim EXACTLY checkV+1 below (ADVICE r11): re-reading
-      // latestVersion inside commitWithStats opened a TOCTOU window
-      // where a commit landing between check and claim was committed on
-      // top of undetected — now that interleaving makes our claim lose,
-      // which re-runs the check
-      val checkV = latestVersion(dir)
-      val live = liveFiles(dir, checkV).toSet
+      checkSets: Seq[(String, Option[String])] = Nil): Int =
+    withSnapshot(dir, maxAttempts = maxAttempts) { snap =>
+      val live = snap.files.toSet
       val gone = remove.filterNot(live)
       if (gone.nonEmpty)
         throw new java.util.ConcurrentModificationException(
@@ -363,14 +367,13 @@ object TxLog {
       // only dvSets left compaction-vs-DV-delete unguarded in one
       // direction — the write-write conflict Delta's matrix documents).
       basedOnDvs.foreach { based =>
-        val nowDvs = liveDvs(dir, checkV)
         val stale = (dvSets.collect {
           case (p, _) if !live.contains(p) =>
             s"$p (no longer live)"
-          case (p, _) if nowDvs.get(p) != based.get(p) =>
+          case (p, _) if snap.dvs.get(p) != based.get(p) =>
             s"$p (deletion vector rebound concurrently)"
         } ++ remove.collect {
-          case p if nowDvs.get(p) != based.get(p) =>
+          case p if snap.dvs.get(p) != based.get(p) =>
             s"$p (deletion vector rebound under a masked rewrite)"
         }).distinct
         if (stale.nonEmpty)
@@ -379,21 +382,10 @@ object TxLog {
               s"file(s) this verb masks changed under it (first: " +
               s"${stale.head}); re-run against the current snapshot")
       }
-      try out = commitWithStats(dir, add, remove, dvSets,
-        atVersion = checkV + 1, colMap = colMap, colTypes = colTypes,
+      commitWithStats(dir, add, remove, dvSets,
+        atVersion = snap.version + 1, colMap = colMap, colTypes = colTypes,
         checkSets = checkSets)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("lost the race") =>
-          if (attempt >= maxAttempts)
-            throw new IllegalStateException(
-              s"txlog: still losing the version race after $maxAttempts " +
-                s"attempts on $dir — writer contention needs backpressure", e)
-          raceBackoff(attempt)
-      }
     }
-    out
-  }
 
   private def readLogFile(dir: String, p: Path, what: String): String = {
     val fs = fsOf(p)
@@ -556,10 +548,12 @@ object TxLog {
     * pre-metadata fallback). When only the CHECKPOINT of `v` survives
     * (expired history), its header/mtime stands in, so a maintained log
     * keeps resolving timestamps. */
-  def manifestTs(dir: String, v: Int): Long = {
-    val p =
-      if (listLog(dir).contains(f"v$v%08d.json")) manifest(dir, v)
-      else checkpointFile(dir, v)
+  def manifestTs(dir: String, v: Int): Long =
+    tsOf(dir, v, listLog(dir).contains(f"v$v%08d.json"))
+
+  /** [[manifestTs]] for a caller that already listed the log. */
+  private def tsOf(dir: String, v: Int, hasManifest: Boolean): Long = {
+    val p = if (hasManifest) manifest(dir, v) else checkpointFile(dir, v)
     // streamed with early exit: the header is the first line, so a
     // million-entry checkpoint's timestamp costs one buffered read
     logLines(dir, p, s"manifest v$v")(_.collectFirst {
@@ -580,13 +574,15 @@ object TxLog {
     * timestamp predates the oldest resolvable commit. */
   def versionAt(dir: String, tsMillis: Long): Int = {
     val names = listLog(dir)
-    val versions = (names.collect { case ManifestName(d) => d.toInt } ++
-      names.collect { case CheckpointName(d) => d.toInt }).distinct.sorted
+    val manifests = names.collect { case ManifestName(d) => d.toInt }.toSet
+    val versions = (manifests ++
+      names.collect { case CheckpointName(d) => d.toInt }).toSeq.sorted
     require(versions.nonEmpty, s"txlog: $dir has no resolvable manifests")
-    val at = versions.filter(v => manifestTs(dir, v) <= tsMillis)
+    def ts(v: Int) = tsOf(dir, v, manifests(v))
+    val at = versions.filter(ts(_) <= tsMillis)
     require(at.nonEmpty,
       s"txlog: no commit of $dir at or before ts=$tsMillis " +
-        s"(oldest resolvable: v${versions.head} @ ${manifestTs(dir, versions.head)})")
+        s"(oldest resolvable: v${versions.head} @ ${ts(versions.head)})")
     at.max
   }
 
@@ -645,9 +641,7 @@ object TxLog {
       }).mkString("", "\n", "\n")
     val out = fs.create(tmp, false)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (!claim(fs, tmp, target))
-      throw new IllegalStateException(
-        s"txlog: lost the race for version $v of $dir — re-read and retry")
+    if (!claim(fs, tmp, target)) throw new LostRace(dir, v)
     v
   }
 
@@ -850,17 +844,22 @@ object TxLog {
           df.filter(keep(org.apache.spark.sql.functions.col("stats")))
             .select("path", "dv").collect(), cmb)
       case None =>
-        val (entries, dv, cmb) = resolveFull(dir, asOf)
-        val cm = cmb.m
+        val s = snapshot(dir, asOf)
         // callers name LOGICAL columns; stats/bloom blobs carry the
         // names the files were written with (physical)
-        val physCol = toPhysicalName(cm, column)
-        val kept = entries.filter(e => bloomMayContain(e._2, physCol, value))
-          .map(_._1)
-        if (kept.isEmpty) None
-        else Some(applyMapping(readMasked(spark, kept, dv.toMap,
-          nullFill = cmb.types.toSeq), cm))
+        val physCol = toPhysicalName(s.colMap, column)
+        prunedFromSnapshot(spark, s, bloomMayContain(_, physCol, value))
     }
+
+  /** Driver-side pruned read: the snapshot's entries whose stats blob
+    * passes `keep`, masked and mapped; None when none survives. */
+  private def prunedFromSnapshot(spark: SparkSession, s: Snapshot,
+      keep: Option[String] => Boolean): Option[DataFrame] = {
+    val kept = s.entries.filter(e => keep(e._2)).map(_._1)
+    if (kept.isEmpty) None
+    else Some(applyMapping(readMasked(spark, kept, s.dvs,
+      nullFill = s.colTypes), s.colMap))
+  }
 
   /** Shared tail of the twin fast path: collected survivor (path, dv)
     * rows → the masked, mapped read. */
@@ -895,55 +894,52 @@ object TxLog {
           rangeSurvivors(df, toPhysicalName(cmb.m, column), lo, hi)
             .select("path", "dv").collect(), cmb)
       case None =>
-        val (entries, dv, cmb) = resolveFull(dir, asOf)
-        val cm = cmb.m
-        val kept = entries
-          .filter(e => statsOverlap(e._2, toPhysicalName(cm, column), lo, hi))
-          .map(_._1)
-        if (kept.isEmpty) None
-        else Some(applyMapping(readMasked(spark, kept, dv.toMap,
-          nullFill = cmb.types.toSeq), cm))
+        val s = snapshot(dir, asOf)
+        val physCol = toPhysicalName(s.colMap, column)
+        prunedFromSnapshot(spark, s, statsOverlap(_, physCol, lo, hi))
     }
 
-  /** The live file set at `asOf` (latest when <= 0): the newest
-    * CHECKPOINT at or below the version seeds the set, then the manifest
-    * SUFFIX replays on top — so resolution cost is O(suffix), not
-    * O(versions since table creation), the property a long-lived 100 TB
-    * table needs. With no usable checkpoint the full prefix replays
-    * (order-preserving adds minus removes). */
-  def liveFiles(dir: String, asOf: Int = -1): Seq[String] =
-    liveEntries(dir, asOf).map(_._1)
-
-  /** [[liveFiles]] with each file's optional manifest STATS blob (see
-    * [[commitWithStats]]) — the input to manifest-level data skipping. */
-  def liveEntries(dir: String, asOf: Int = -1): Seq[(String, Option[String])] =
-    resolveState(dir, asOf)._1
-
-  /** The live DELETION-VECTOR bindings at `asOf` (latest when <= 0):
-    * data-file path → sidecar dir holding its masked (part-file, row
-    * position) pairs. Empty for a table no merge-on-read verb ever
-    * touched — every reader's fast path is then exactly the pre-DV
-    * plan. */
-  def liveDvs(dir: String, asOf: Int = -1): Map[String, String] =
-    resolveState(dir, asOf)._2.toMap
-
-  private def resolveState(dir: String, asOf: Int): (
-      Seq[(String, Option[String])],
-      scala.collection.mutable.LinkedHashMap[String, String]) = {
-    val (e, d, _) = resolveFull(dir, asOf)
-    (e, d)
+  /** One resolved table state: everything a verb reads of the log at
+    * `version` — live entries with their stats blobs, deletion-vector
+    * bindings, column mapping, [[addColumn]] types, CHECK constraints,
+    * idempotent-writer marks and the evolved partition spec. Built by
+    * [[snapshot]] from ONE `_txlog` listing and ONE replay. Entries keep
+    * replay order (adds in commit order): [[read]]'s file order and the
+    * merge schema check's head file depend on it. A verb resolves one
+    * per attempt and passes it down, so every fact it acts on comes from
+    * the same version. */
+  private[graft] final case class Snapshot(dir: String, version: Int,
+      entries: Seq[(String, Option[String])],
+      dvs: Map[String, String],
+      colMap: Option[Seq[(String, String)]],
+      colTypes: Seq[(String, String)],
+      checks: Seq[(String, String)],
+      txns: Seq[(String, Long)],
+      partSpec: Option[Seq[String]]) {
+    lazy val files: Seq[String] = entries.map(_._1)
+    lazy val stats: Map[String, Option[String]] = entries.toMap
   }
 
-  private def resolveFull(dir: String, asOf: Int): (
-      Seq[(String, Option[String])],
-      scala.collection.mutable.LinkedHashMap[String, String],
-      ColMapBox) = {
-    val upTo = if (asOf <= 0) latestVersion(dir) else asOf
+  /** The table state at `asOf` (latest when <= 0). The one listing
+    * yields both the latest version and the newest checkpoint at or
+    * below the target; that checkpoint seeds the state, then the
+    * manifest SUFFIX replays on top — so resolution cost is O(suffix),
+    * not O(versions since table creation), the property a long-lived
+    * 100 TB table needs. With no usable checkpoint the full prefix
+    * replays (order-preserving adds minus removes). A torn or missing
+    * manifest fails loudly; a snapshot is never served partial. */
+  private[graft] def snapshot(dir: String, asOf: Int = -1): Snapshot =
+    snapshotIn(dir, listLog(dir), asOf)
+
+  /** [[snapshot]] against an already-taken listing of the log. */
+  private def snapshotIn(dir: String, names: Array[String],
+      asOf: Int): Snapshot = {
+    val upTo = if (asOf <= 0) latestOf(names) else asOf
     val live = scala.collection.mutable.LinkedHashMap
       .empty[String, Option[String]]
     val dv = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val cm = new ColMapBox
-    val from = latestCheckpointVersion(dir, upTo) match {
+    val from = checkpointAtOrBelow(names, upTo) match {
       case Some(cv) =>
         logLines(dir, checkpointFile(dir, cv), f"checkpoint c$cv%08d")(
           replayInto(live, _, f"checkpoint c$cv%08d", dv, cm))
@@ -954,8 +950,26 @@ object TxLog {
       logLines(dir, manifest(dir, v), s"manifest v$v (asOf=$asOf)")(
         replayInto(live, _, s"v$v", dv, cm))
     }
-    (live.toSeq, dv, cm)
+    Snapshot(dir, upTo, live.toSeq, dv.toMap, cm.m, cm.types.toSeq,
+      cm.checks.toSeq, cm.txns.toSeq, cm.partSpec)
   }
+
+  /** The live file set at `asOf` (latest when <= 0). */
+  def liveFiles(dir: String, asOf: Int = -1): Seq[String] =
+    snapshot(dir, asOf).files
+
+  /** [[liveFiles]] with each file's optional manifest STATS blob (see
+    * [[commitWithStats]]) — the input to manifest-level data skipping. */
+  def liveEntries(dir: String, asOf: Int = -1): Seq[(String, Option[String])] =
+    snapshot(dir, asOf).entries
+
+  /** The live DELETION-VECTOR bindings at `asOf` (latest when <= 0):
+    * data-file path → sidecar dir holding its masked (part-file, row
+    * position) pairs. Empty for a table no merge-on-read verb ever
+    * touched — every reader's fast path is then exactly the pre-DV
+    * plan. */
+  def liveDvs(dir: String, asOf: Int = -1): Map[String, String] =
+    snapshot(dir, asOf).dvs
 
   /** The column mapping in force at `asOf` (latest when <= 0):
     * `(physical, logical)` pairs in logical column order, or None for a
@@ -963,7 +977,7 @@ object TxLog {
     * serves physical names untouched, the pre-mapping fast path). */
   def columnMapping(dir: String, asOf: Int = -1)
       : Option[Seq[(String, String)]] =
-    resolveFull(dir, asOf)._3.m
+    snapshot(dir, asOf).colMap
 
   /** The [[addColumn]] type registry in force at `asOf` (latest when
     * <= 0): physical name → type DDL for mapped columns the read path
@@ -971,7 +985,7 @@ object TxLog {
     * COLUMN never touched — every such read keeps its untyped fast
     * path. */
   def columnTypes(dir: String, asOf: Int = -1): Seq[(String, String)] =
-    resolveFull(dir, asOf)._3.types.toSeq
+    snapshot(dir, asOf).colTypes
 
   /** The EVOLVED partition spec in force at `asOf` (latest when <= 0):
     * None for a table [[setPartitionSpec]] never touched (the catalog
@@ -1090,28 +1104,18 @@ object TxLog {
     specs.map(s => parsePartSpec(s).source)
 
   def setPartitionSpec(dir: String, specs: Seq[String]): Int = {
-    specs.foreach(parsePartSpec) // validate each spec's grammar
-    require(specs.map(s => parsePartSpec(s).spec).distinct.size ==
-      specs.size, s"txlog: duplicate partition specs: $specs")
-    require(columnMapping(dir).isEmpty,
-      "txlog: partition-spec evolution is not supported on a " +
-        "column-mapped table — the partitioned ingest writes storage " +
-        "under declared names")
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      try out = commitWithStats(dir, Nil,
-        partSpecSet = Some(specs.map(s => parsePartSpec(s).spec)))
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt)
-      }
+    val canonical = specs.map(s => parsePartSpec(s).spec) // validates each
+    require(canonical.distinct.size == specs.size,
+      s"txlog: duplicate partition specs: $specs")
+    val out = withSnapshot(dir) { snap =>
+      require(snap.colMap.isEmpty,
+        "txlog: partition-spec evolution is not supported on a " +
+          "column-mapped table — the partitioned ingest writes storage " +
+          "under declared names")
+      commitWithStats(dir, Nil, partSpecSet = Some(canonical),
+        atVersion = snap.version + 1)
     }
-    cachePartSpec(dir, out, Some(specs.map(s => parsePartSpec(s).spec)))
+    cachePartSpec(dir, out, Some(canonical))
     out
   }
 
@@ -1187,47 +1191,33 @@ object TxLog {
     * enabling column mapping stamps every existing column with its own
     * name). */
   private def identityMappingFromFiles(spark: SparkSession,
-      dir: String): Seq[(String, String)] = {
-    val files = liveFiles(dir)
-    require(files.nonEmpty,
-      s"txlog: cannot derive a column mapping for empty table $dir")
+      snap: Snapshot): Seq[(String, String)] = {
+    require(snap.files.nonEmpty,
+      s"txlog: cannot derive a column mapping for empty table ${snap.dir}")
     val fromFiles = spark.read.option("mergeSchema", "true")
-      .parquet(files: _*).schema.fieldNames.toSeq
+      .parquet(snap.files: _*).schema.fieldNames.toSeq
     // a MAPPING-FREE [[addColumn]] registers a column no file carries
     // yet; the first schema verb's identity bootstrap must keep it, or
     // the rename/drop would silently lose the declared column
-    val registryOnly = resolveFull(dir, -1)._3.types.keys.toSeq
-      .filterNot(fromFiles.contains)
+    val registryOnly = snap.colTypes.map(_._1).filterNot(fromFiles.contains)
     (fromFiles ++ registryOnly).map(n => n -> n)
   }
 
   /** Metadata-only colmap commit under optimistic retry. `mutate` is
-    * re-applied to a FRESH `columnMapping(dir)` read on every attempt
-    * (ADVICE r12): a lost race means another writer committed — possibly
-    * a schema verb — between our read and our claim, and re-stating the
+    * re-applied to the mapping of every attempt's FRESH snapshot (ADVICE
+    * r12): a lost race means another writer committed — possibly a
+    * schema verb — between our read and our claim, and re-stating the
     * stale snapshot would silently undo that writer's rename/drop. The
     * verb's own validation reruns against the rebased mapping, so a
     * genuinely conflicting pair (two renames of one column) still fails
     * loudly instead of last-wins. */
-  private def commitColMap(dir: String,
-      mutate: Seq[(String, String)] => Seq[(String, String)],
-      bootstrap: () => Seq[(String, String)],
-      maxAttempts: Int = MaxCommitAttempts): Int = {
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      val base = columnMapping(dir).getOrElse(bootstrap())
-      try out = commitWithStats(dir, add = Nil, colMap = Some(mutate(base)))
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null && e.getMessage.contains("lost the race") =>
-          if (attempt >= maxAttempts) throw e
-          raceBackoff(attempt)
-      }
+  private def commitColMap(spark: SparkSession, dir: String,
+      mutate: Seq[(String, String)] => Seq[(String, String)]): Int =
+    withSnapshot(dir) { snap =>
+      val base = snap.colMap.getOrElse(identityMappingFromFiles(spark, snap))
+      commitWithStats(dir, add = Nil, colMap = Some(mutate(base)),
+        atVersion = snap.version + 1)
     }
-    out
-  }
 
   /** RENAME COLUMN as a METADATA-ONLY commit (public precedent: Delta's
     * column mapping, name mode): the manifest gains a logical↔physical
@@ -1254,7 +1244,7 @@ object TxLog {
   def renameColumn(spark: SparkSession, dir: String,
       oldName: String, newName: String): Int = {
     require(oldName != newName, s"rename to self: $oldName")
-    commitColMap(dir, m => {
+    commitColMap(spark, dir, m => {
       require(m.exists(_._2 == oldName),
         s"txlog: no column '$oldName' to rename in $dir " +
           s"(logical schema: ${m.map(_._2).mkString(", ")})")
@@ -1264,7 +1254,7 @@ object TxLog {
         case (p, l) if l == oldName => (p, newName)
         case other => other
       }
-    }, () => identityMappingFromFiles(spark, dir))
+    })
   }
 
   /** ADD COLUMN as a METADATA-ONLY commit (public precedent: Delta's
@@ -1298,45 +1288,35 @@ object TxLog {
     // validate the DDL up front: a bad type must fail THIS verb, not
     // every future read of the table
     val dt = org.apache.spark.sql.types.DataType.fromDDL(typeDdl)
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      try out = columnMapping(dir) match {
+    withSnapshot(dir) { snap =>
+      snap.colMap match {
         case None =>
-          val fileCols = identityMappingFromFiles(spark, dir).map(_._2)
-          val registered = resolveFull(dir, -1)._3.types.keys.toSeq
-          require(!fileCols.contains(name) && !registered.contains(name),
+          // file columns plus registry-only (mapping-free) adds
+          val cols = identityMappingFromFiles(spark, snap).map(_._2)
+          require(!cols.contains(name),
             s"txlog: column '$name' already exists in $dir " +
-              s"(logical schema: ${(fileCols ++ registered).distinct
-                .mkString(", ")})")
+              s"(logical schema: ${cols.mkString(", ")})")
           commitWithStats(dir, add = Nil,
-            colTypes = Seq(name -> Some(dt.catalogString)))
+            colTypes = Seq(name -> Some(dt.catalogString)),
+            atVersion = snap.version + 1)
         case Some(base) =>
           require(!base.exists(_._2 == name),
             s"txlog: column '$name' already exists in $dir " +
               s"(logical schema: ${base.map(_._2).mkString(", ")})")
-          val phys = s"c${latestVersion(dir) + 1}_$name"
+          val phys = s"c${snap.version + 1}_$name"
           commitWithStats(dir, add = Nil,
             colMap = Some(base :+ (phys -> name)),
-            colTypes = Seq(phys -> Some(dt.catalogString)))
-      }
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt)
+            colTypes = Seq(phys -> Some(dt.catalogString)),
+            atVersion = snap.version + 1)
       }
     }
-    out
   }
 
   /** The persistent CHECK constraints in force at `asOf` (latest when
     * <= 0): name → SQL expression. Empty for tables [[addConstraint]]
     * never touched — every such write keeps its unchecked fast path. */
   def constraintsOf(dir: String, asOf: Int = -1): Seq[(String, String)] =
-    resolveFull(dir, asOf)._3.checks.toSeq
+    snapshot(dir, asOf).checks
 
   /** The high-water transaction mark an idempotent writer (`app`) last
     * committed with (Delta's txnVersion analogue). Marks are never
@@ -1409,62 +1389,50 @@ object TxLog {
     require(name.nonEmpty && exprSql.nonEmpty,
       "addConstraint needs a name and a CHECK expression")
     val c = expr(exprSql) // malformed SQL fails HERE, not on every write
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      // pin the claim to the version the existing-data scan validated
-      // (the analyze() discipline, ADVICE r13): a write that commits
-      // between the scan and this commit takes the claimed slot, so WE
-      // lose the race and re-validate against ITS rows — without the
-      // pin, neither side would see the other and a constraint could be
-      // born violated.
-      val checkV = latestVersion(dir)
-      val existing = resolveFull(dir, checkV)._3.checks
+    // the claim pins to the version the existing-data scan validated
+    // (the analyze() discipline, ADVICE r13): a write that commits
+    // between the scan and this commit takes the claimed slot, so WE
+    // lose the race and re-validate against ITS rows — without the pin,
+    // neither side would see the other and a constraint could be born
+    // violated.
+    withSnapshot(dir) { snap =>
+      val existing = snap.checks.toMap
       require(!existing.contains(name),
         s"txlog: constraint '$name' already exists on $dir " +
           s"(CHECK (${existing.getOrElse(name, "")}))")
-      if (liveFiles(dir, checkV).nonEmpty) {
-        val bad = read(spark, dir, checkV)
+      if (snap.files.nonEmpty) {
+        val bad = readSnapshot(spark, snap)
           .agg(sum(when(coalesce(c, lit(false)), 0L).otherwise(1L)))
           .head().getLong(0)
         require(bad == 0L,
           s"txlog: cannot add constraint '$name' CHECK ($exprSql) — " +
             s"$bad existing row(s) violate it; fix the data first")
       }
-      try out = commitWithStats(dir, add = Nil,
-        checkSets = Seq(name -> Some(exprSql)), atVersion = checkV + 1)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt)
-      }
+      commitWithStats(dir, add = Nil,
+        checkSets = Seq(name -> Some(exprSql)), atVersion = snap.version + 1)
     }
-    out
   }
 
   /** DROP CONSTRAINT — the rule leaves the table as a metadata-only
     * commit; time travel to earlier versions still enforces nothing
     * (enforcement is write-time, and writes resolve the LATEST set). */
   def dropConstraint(dir: String, name: String): Int = {
-    val existing = resolveFull(dir, -1)._3.checks
+    val existing = snapshot(dir).checks.map(_._1)
     require(existing.contains(name),
       s"txlog: no constraint '$name' on $dir " +
-        s"(constraints: ${existing.keys.mkString(", ")})")
+        s"(constraints: ${existing.mkString(", ")})")
     commitWithStats(dir, add = Nil, checkSets = Seq(name -> None))
   }
 
-  /** Write-time CHECK enforcement — ONE aggregation pass over the batch
-    * (all constraints together, [[commitChecked]]'s shape) naming every
-    * violated rule with its row count; zero cost for tables without
-    * constraints. `rows` carries the LOGICAL schema (constraints name
-    * the columns users see). */
-  private def enforceChecks(spark: SparkSession, dir: String,
-      rows: DataFrame, verb: String): Unit = {
+  /** Write-time CHECK enforcement against the snapshot's constraints —
+    * ONE aggregation pass over the batch (all constraints together,
+    * [[commitChecked]]'s shape) naming every violated rule with its row
+    * count; zero cost for tables without constraints. `rows` carries the
+    * LOGICAL schema (constraints name the columns users see). */
+  private def enforceChecks(snap: Snapshot, rows: DataFrame,
+      verb: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
-    val checks = resolveFull(dir, -1)._3.checks.toSeq
+    val checks = snap.checks
     if (checks.isEmpty) return
     val aggs = checks.map { case (n, e) =>
       sum(when(coalesce(expr(e), lit(false)), 0L).otherwise(1L)).as(n)
@@ -1475,8 +1443,21 @@ object TxLog {
         s"'$n' CHECK ($e): ${r.getLong(i)} row(s)"
     }
     require(violated.isEmpty,
-      s"txlog: $verb into $dir violates table constraint(s) — " +
+      s"txlog: $verb into ${snap.dir} violates table constraint(s) — " +
         s"${violated.mkString("; ")}; nothing committed")
+  }
+
+  /** CHECK enforcement for the pinned-claim ingest loops: the batch is
+    * aggregated again only when an attempt's snapshot carries another
+    * constraint set than the one last validated — the verdict depends
+    * on nothing else. */
+  private def checksOnce(rows: DataFrame, verb: String): Snapshot => Unit = {
+    var validated: Option[Seq[(String, String)]] = None
+    snap =>
+      if (!validated.contains(snap.checks)) {
+        enforceChecks(snap, rows, verb)
+        validated = Some(snap.checks)
+      }
   }
 
   /** DROP COLUMN as a METADATA-ONLY commit: the column leaves the
@@ -1484,14 +1465,14 @@ object TxLog {
     * bytes stay in place until files naturally rewrite, and time travel
     * to pre-drop versions still serves it. Returns the commit version. */
   def dropColumn(spark: SparkSession, dir: String, name: String): Int =
-    commitColMap(dir, m => {
+    commitColMap(spark, dir, m => {
       require(m.exists(_._2 == name),
         s"txlog: no column '$name' to drop in $dir " +
           s"(logical schema: ${m.map(_._2).mkString(", ")})")
       val next = m.filterNot(_._2 == name)
       require(next.nonEmpty, s"txlog: dropping the last column of $dir")
       next
-    }, () => identityMappingFromFiles(spark, dir))
+    })
 
   /** Rename a batch's LOGICAL columns to the table's PHYSICAL names —
     * the write-side half of column mapping, for appends to a mapped
@@ -1505,100 +1486,92 @@ object TxLog {
       name: String, autoStatsCols: Int = 0,
       txn: Option[(String, Long)] = None): Int = {
     import org.apache.spark.sql.functions.col
-    // PIN the validation version (the addConstraint discipline, applied
-    // symmetrically — the r15 race spec caught the hole the old
-    // "a concurrent append always loses its claim" argument missed: an
-    // append whose BATCH WRITE overlaps a constraint commit computes
-    // latestVersion AFTER that commit, claims the NEXT free slot
-    // without ever losing a race, and lands unvalidated. Claiming
-    // exactly validatedV+1 makes any interleaving commit force this
-    // writer through a lost race and a re-validation.)
-    var validatedV = latestVersion(dir)
-    enforceChecks(spark, dir, df, "append") // logical rows, pre-rename
     def autoStats(path: String): Option[String] =
       autoStatsFor(spark, path, autoStatsCols)
-    // re-validate iff the log moved past the pinned version (covers
-    // both the lost-race retry and the batch-write window)
-    def revalidate(verb: String): Int = {
-      val v = latestVersion(dir)
-      if (v != validatedV) {
-        enforceChecks(spark, dir, df, verb)
-        validatedV = v
+    val s0 = snapshot(dir)
+    if (s0.colMap.isEmpty)
+      // unmapped table: physical == logical, plain append
+      pinnedIngest(s0, df, "append") {
+        val path = writeBatch(df, dir, name)
+        Seq(path -> autoStats(path))
+      } { (snap, adds) =>
+        commitWithStats(dir, adds, txn = txn, atVersion = snap.version + 1)
       }
-      v
-    }
-    def commitOne(path: String): Int = {
+    else {
+      // the mapping is re-read on EVERY attempt (ADVICE r12): a lost
+      // race means another commit landed — if it was a schema verb,
+      // re-stating our pre-race snapshot would silently undo it. The
+      // physical batch is (re)written whenever the rebased mapping
+      // demands different physical names, and the commit omits the
+      // colmap line entirely when the batch introduces no new logical
+      // columns — a pure append then can't clobber anyone's mapping.
+      val validate = checksOnce(df, "append") // logical rows, pre-rename
+      validate(s0)
       var attempt = 0
-      var out = -1
-      val st = autoStats(path)
-      while (out < 0) {
+      // (phys names, path, stats) of the batch written so far
+      var written: Option[(Seq[String], String, Option[String])] = None
+      withSnapshot(dir, Some(s0)) { snap =>
         attempt += 1
-        val v = revalidate("append")
-        try out = commitWithStats(dir, Seq(path -> st), txn = txn,
-          atVersion = v + 1)
-        catch {
-          case e: IllegalStateException
-              if e.getMessage != null &&
-                e.getMessage.contains("lost the race") =>
-            if (attempt >= MaxCommitAttempts) throw e
-            raceBackoff(attempt)
+        validate(snap)
+        val m = snap.colMap.getOrElse(identityMappingFromFiles(spark, snap))
+        val nextV = snap.version + 1
+        val known = m.map { case (p, l) => l -> p }.toMap
+        val fresh = df.columns.toSeq.filterNot(known.contains)
+          .map(l => l -> s"c${nextV}_$l")
+        val full = known ++ fresh
+        val physNames = df.columns.toSeq.map(full)
+        val (path, st) = written match {
+          case Some((names, p, st)) if names == physNames => (p, st)
+          case _ =>
+            val p = writeBatch(df.select(df.columns.toSeq.map(c =>
+              col(c).as(full(c))): _*), dir, name + (
+                if (attempt == 1) "" else s"_r$attempt"))
+            val st = autoStats(p) // physical names, as blobs carry
+            written = Some((physNames, p, st))
+            (p, st)
         }
+        val colMap =
+          if (fresh.isEmpty) None
+          else Some(m ++ fresh.map { case (l, p) => (p, l) })
+        commitWithStats(dir, Seq(path -> st), colMap = colMap, txn = txn,
+          atVersion = nextV)
       }
-      out
-    }
-    columnMapping(dir) match {
-      case None =>
-        // unmapped table: physical == logical, plain append
-        commitOne(writeBatch(df, dir, name))
-      case Some(_) =>
-        // the mapping is re-read on EVERY attempt (ADVICE r12): a lost
-        // race means another commit landed — if it was a schema verb,
-        // re-stating our pre-race snapshot would silently undo it. The
-        // physical batch is (re)written whenever the rebased mapping
-        // demands different physical names, and the commit omits the
-        // colmap line entirely when the batch introduces no new logical
-        // columns — a pure append then can't clobber anyone's mapping.
-        var attempt = 0
-        var out = -1
-        var written: Option[(Seq[String], String)] = None // (phys names, path)
-        var writtenStats: Option[String] = None
-        while (out < 0) {
-          attempt += 1
-          val v = revalidate("append") // pin: see commitOne
-          val m = columnMapping(dir, v).getOrElse(
-            identityMappingFromFiles(spark, dir))
-          val nextV = v + 1
-          val known = m.map { case (p, l) => l -> p }.toMap
-          val fresh = df.columns.toSeq.filterNot(known.contains)
-            .map(l => l -> s"c${nextV}_$l")
-          val full = known ++ fresh
-          val physNames = df.columns.toSeq.map(full)
-          val path = written match {
-            case Some((names, p)) if names == physNames => p
-            case _ =>
-              val p = writeBatch(df.select(df.columns.toSeq.map(c =>
-                col(c).as(full(c))): _*), dir, name + (
-                  if (attempt == 1) "" else s"_r$attempt"))
-              written = Some((physNames, p))
-              writtenStats = autoStats(p) // physical names, as blobs carry
-              p
-          }
-          val colMap =
-            if (fresh.isEmpty) None
-            else Some(m ++ fresh.map { case (l, p) => (p, l) })
-          try out = commitWithStats(dir, Seq(path -> writtenStats),
-            colMap = colMap, txn = txn, atVersion = nextV)
-          catch {
-            case e: IllegalStateException
-                if e.getMessage != null &&
-                  e.getMessage.contains("lost the race") =>
-              if (attempt >= MaxCommitAttempts) throw e
-              raceBackoff(attempt) // loop head re-validates + re-pins
-          }
-        }
-        out
     }
   }
+
+  /** The pinned-claim ingest shape of [[appendMapped]], [[overwriteAll]]
+    * and the partitioned ingests: validate the batch's CHECKs against
+    * `s0`, `stage` its files once, then claim exactly the validated
+    * version + 1 (the addConstraint discipline, applied symmetrically —
+    * the r15 race spec caught the hole the old "a concurrent append
+    * always loses its claim" argument missed: an append whose BATCH
+    * WRITE overlaps a constraint commit computed its version AFTER that
+    * commit, claimed the NEXT free slot without ever losing a race, and
+    * landed unvalidated). Any interleaving commit forces a lost race, and
+    * the retry re-validates whenever its snapshot carries another
+    * constraint set ([[checksOnce]]). */
+  private def pinnedIngest[A](s0: Snapshot, rows: DataFrame, verb: String)(
+      stage: => A)(claim: (Snapshot, A) => Int): Int = {
+    val validate = checksOnce(rows, verb)
+    validate(s0)
+    val staged = stage
+    withSnapshot(s0.dir, Some(s0)) { snap =>
+      validate(snap)
+      claim(snap, staged)
+    }
+  }
+
+  /** The full-replace claim of [[overwriteAll]],
+    * [[overwritePartitionedCols]] and [[truncate]]: `adds` in, every live
+    * file of `snap` out (their deletion-vector bindings die with them),
+    * and a mapped table's colmap restated to identity — the new files
+    * carry logical names, and a stale mapping left in force would
+    * project wrong or missing columns (ADVICE r13). */
+  private def replaceAll(snap: Snapshot,
+      adds: Seq[(String, Option[String])]): Int =
+    commitWithStats(snap.dir, adds, remove = snap.files,
+      colMap = if (snap.colMap.isDefined) Some(Nil) else None,
+      atVersion = snap.version + 1)
 
   /** STATS-ON-WRITE (Delta's default analogue): derive a manifest range
     * blob for up to `n` numeric columns of a just-written batch — one
@@ -1632,36 +1605,11 @@ object TxLog {
     * surface ([[GraftCatalog]]); readers at older versions still time
     * travel to the replaced content. Returns the commit version. */
   def overwriteAll(spark: SparkSession, dir: String, df: DataFrame,
-      name: String, autoStatsCols: Int = 0): Int = {
-    // pinned-claim discipline (see appendMapped): validate at a version,
-    // claim exactly that version + 1, re-validate whenever the log moved
-    var validatedV = latestVersion(dir)
-    enforceChecks(spark, dir, df, "overwrite")
-    val path = writeBatch(df, dir, name)
-    val st = autoStatsFor(spark, path, autoStatsCols)
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      val v = latestVersion(dir)
-      if (v != validatedV) {
-        enforceChecks(spark, dir, df, "overwrite")
-        validatedV = v
-      }
-      try out = commitWithStats(dir, Seq(path -> st),
-        remove = liveFiles(dir, v),
-        colMap = if (columnMapping(dir, v).isDefined) Some(Nil) else None,
-        atVersion = v + 1)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt) // loop head re-validates + re-pins
-      }
-    }
-    out
-  }
+      name: String, autoStatsCols: Int = 0): Int =
+    pinnedIngest(snapshot(dir), df, "overwrite") {
+      val path = writeBatch(df, dir, name)
+      Seq(path -> autoStatsFor(spark, path, autoStatsCols))
+    }(replaceAll)
 
   /** DESCRIBE HISTORY — one row per still-resolvable commit (public
     * precedent: Delta's DESCRIBE HISTORY): version, commit timestamp,
@@ -1688,7 +1636,8 @@ object TxLog {
           case _                      =>
         }
       }
-      (v, manifestTs(dir, v), adds, removes, dvSet, dvClear, schema)
+      (v, tsOf(dir, v, hasManifest = true), adds, removes, dvSet, dvClear,
+        schema)
     }.toDF("version", "ts_millis", "n_added", "n_removed",
       "n_dv_bound", "n_dv_cleared", "schema_change")
   }
@@ -1701,9 +1650,9 @@ object TxLog {
     * so time travel to pre-checkpoint versions still works. Returns the
     * checkpointed version (0 = empty table, nothing written). */
   def checkpoint(dir: String): Int = {
-    val v = latestVersion(dir)
+    val snap = snapshot(dir)
+    val v = snap.version
     if (v == 0) return 0
-    val (entries, dvs, cmAtV) = resolveFull(dir, v)
     val ld = logDir(dir)
     val fs = fsOf(ld)
     val tmp = new Path(ld, s".c$v.tmp${System.nanoTime()}")
@@ -1735,33 +1684,33 @@ object TxLog {
       // replay identically; they just lack the marker and never take
       // the header-only fast path.
       w.write("meta\tlayout\t2\n")
-      cmAtV.partSpec.foreach {
+      snap.partSpec.foreach {
         case Nil => w.write("meta\tpartspec\t-\n")
         case sp  =>
           w.write(s"meta\tpartspec\t${sp.map(encCol).mkString(",")}\n")
       }
-      cmAtV.m.foreach(m => w.write(s"colmap\t${renderColMap(m)}\n"))
-      cmAtV.types.foreach { case (p, t) =>
+      snap.colMap.foreach(m => w.write(s"colmap\t${renderColMap(m)}\n"))
+      snap.colTypes.foreach { case (p, t) =>
         w.write(s"coltype\t${encCol(p)}\t${encCol(t)}\n") // addColumn
       }                                  // registry rides checkpoints
-      cmAtV.checks.foreach { case (n, e) =>
+      snap.checks.foreach { case (n, e) =>
         w.write(s"constraint\t${encCol(n)}\t${encCol(e)}\n")
       }
-      cmAtV.txns.foreach { case (a, id) =>
+      snap.txns.foreach { case (a, id) =>
         w.write(s"meta\ttxn\t${encCol(a)}\t$id\n") // idempotence marks
       }                                            // survive retention
-      entries.foreach {
+      snap.entries.foreach {
         case (p, Some(st)) => w.write(s"add\t$p\t$st\n")
         case (p, None)     => w.write(s"add\t$p\n")
       }
-      entries.foreach { case (p, _) =>
-        dvs.get(p).foreach(d => w.write(s"dv\t$p\t$d\n"))
+      snap.entries.foreach { case (p, _) =>
+        snap.dvs.get(p).foreach(d => w.write(s"dv\t$p\t$d\n"))
       }
     } finally w.close()
     if (!claim(fs, tmp, checkpointFile(dir, v)))
       throw new IllegalStateException(
         s"txlog: checkpoint race for version $v of $dir — already written")
-    writeCheckpointTwin(dir, v, entries.size)
+    writeCheckpointTwin(dir, v, snap.entries.size)
     v
   }
 
@@ -1930,7 +1879,7 @@ object TxLog {
     * delta is too large to plan as literals (an unmaintained table —
     * the driver replay is the right tool there). Correctness contract:
     * the returned frame holds EXACTLY the rows
-    * `resolveFull(dir, asOf)` would produce (spec-pinned). */
+    * `snapshot(dir, asOf)` holds (spec-pinned). */
   /** Probe surface of the twin path: the (path, stats, dv) entry rows
     * the distributed resolution produces, or None when no twin fast
     * path is eligible — specs and the gate pin this EQUAL to the
@@ -1979,7 +1928,7 @@ object TxLog {
       asOf: Int = -1): Option[(DataFrame, ColMapBox)] = {
     import org.apache.spark.sql.functions._
     val upTo = if (asOf <= 0) latestVersion(dir) else asOf
-    latestCheckpointVersion(dir, upTo).flatMap { cv =>
+    checkpointAtOrBelow(listLog(dir), upTo).flatMap { cv =>
       val twin = twinPath(dir, cv)
       val fs = fsOf(twin)
       if (!fs.exists(new Path(twin, "_SUCCESS"))) None
@@ -2043,10 +1992,11 @@ object TxLog {
   def expireManifests(dir: String): Int = {
     val ld = logDir(dir)
     val fs = fsOf(ld)
-    latestCheckpointVersion(dir, latestVersion(dir)) match {
+    val names = listLog(dir)
+    checkpointAtOrBelow(names, Int.MaxValue) match {
       case None => 0
       case Some(cv) =>
-        val victims = listLog(dir)
+        val victims = names
           .collect { case n @ ManifestName(d) if d.toInt <= cv => n }
         victims.foreach(n => fs.delete(new Path(ld, n), false))
         victims.length
@@ -2092,9 +2042,9 @@ object TxLog {
     // logical names (and typed null-fill adds) resolve at the window
     // END (one schema per feed)
     else {
-      val cmb = resolveFull(dir, toVersion)._3
-      Some(applyMapping(readMasked(spark, files, liveDvs(dir, toVersion),
-        nullFill = cmb.types.toSeq), cmb.m))
+      val snap = snapshot(dir, toVersion)
+      Some(applyMapping(readMasked(spark, files, snap.dvs,
+        nullFill = snap.colTypes), snap.colMap))
     }
   }
 
@@ -2117,10 +2067,11 @@ object TxLog {
       toVersion: Int): (Seq[String], Seq[String]) = {
     require(fromVersion >= 0 && toVersion >= fromVersion,
       s"bad version window: ($fromVersion, $toVersion]")
+    val names = listLog(dir) // both ends from one listing
     val before =
       if (fromVersion == 0) Set.empty[String]
-      else liveFiles(dir, fromVersion).toSet
-    val after = liveFiles(dir, toVersion).toSet
+      else snapshotIn(dir, names, fromVersion).files.toSet
+    val after = snapshotIn(dir, names, toVersion).files.toSet
     ((after -- before).toSeq.sorted, (before -- after).toSeq.sorted)
   }
 
@@ -2140,15 +2091,16 @@ object TxLog {
     require(fromVersion >= 0 && toVersion >= fromVersion,
       s"bad version window: ($fromVersion, $toVersion]")
     val sign = org.apache.spark.sql.functions.lit _
-    val (beforeEntries, beforeDvM) =
-      if (fromVersion == 0)
-        (Seq.empty[(String, Option[String])], Map.empty[String, String])
-      else { val (e, d) = resolveState(dir, fromVersion); (e, d.toMap) }
-    val (afterEntries, afterDvM) = {
-      val (e, d) = resolveState(dir, toVersion); (e, d.toMap)
-    }
-    val beforeFiles = beforeEntries.map(_._1).toSet
-    val afterFiles = afterEntries.map(_._1).toSet
+    // both ends from one listing of the log
+    val names = listLog(dir)
+    val (beforeFiles, beforeDvM) =
+      if (fromVersion == 0) (Set.empty[String], Map.empty[String, String])
+      else {
+        val s = snapshotIn(dir, names, fromVersion)
+        (s.files.toSet, s.dvs)
+      }
+    val after = snapshotIn(dir, names, toVersion)
+    val (afterFiles, afterDvM) = (after.files.toSet, after.dvs)
     // file-grain diff, each side masked AS OF ITS OWN SNAPSHOT: an added
     // file contributes its window-end rows, a removed file retracts the
     // rows that were VISIBLE at window start (retracting rows a DV had
@@ -2158,7 +2110,7 @@ object TxLog {
     // typed null-fill adds resolve at the window END on every leg — the
     // feed's one logical schema; a removed (pre-add) file's retractions
     // null-fill the added column exactly like its snapshot read would
-    val nf = resolveFull(dir, toVersion)._3.types.toSeq
+    val nf = after.colTypes
     val plus =
       if (added.isEmpty) None
       else Some(readMasked(spark, added, afterDvM, nullFill = nf)
@@ -2211,8 +2163,7 @@ object TxLog {
       .reduceOption(_ unionByName _)
       // one logical schema per feed, resolved at the window END; the
       // sign column is feed metadata and passes through the mapping
-      .map(applyMapping(_, columnMapping(dir, toVersion),
-        keep = Seq(signCol)))
+      .map(applyMapping(_, after.colMap, keep = Seq(signCol)))
   }
 
   /** Snapshot read — all live parquet files as one DataFrame; empty
@@ -2227,17 +2178,21 @@ object TxLog {
     * fast path — a homogeneous table pays nothing for the capability. */
   def read(spark: SparkSession, dir: String, asOf: Int = -1,
       mergeSchema: Boolean = false): DataFrame = {
-    val (entries, dv, cmb) = resolveFull(dir, asOf)
-    val files = entries.map(_._1)
-    require(files.nonEmpty,
+    val snap = snapshot(dir, asOf)
+    require(snap.files.nonEmpty,
       s"txlog: snapshot of $dir at asOf=$asOf holds no files")
-    // the mapping resolves AS OF the same snapshot — time travel across
-    // a rename serves that version's own logical names; typed metadata
-    // adds ([[addColumn]]) null-fill as of the same version; manifest
-    // stats ride into the scan so pushed filters SKIP files at planning
-    applyMapping(readMasked(spark, files, dv.toMap, mergeSchema,
-      nullFill = cmb.types.toSeq, stats = entries.toMap), cmb.m)
+    readSnapshot(spark, snap, mergeSchema)
   }
+
+  /** [[read]] of an already-resolved snapshot. The mapping resolves AS
+    * OF the same snapshot — time travel across a rename serves that
+    * version's own logical names; typed metadata adds ([[addColumn]])
+    * null-fill as of the same version; manifest stats ride into the scan
+    * so pushed filters SKIP files at planning. */
+  private def readSnapshot(spark: SparkSession, snap: Snapshot,
+      mergeSchema: Boolean = false): DataFrame =
+    applyMapping(readMasked(spark, snap.files, snap.dvs, mergeSchema,
+      nullFill = snap.colTypes, stats = snap.stats), snap.colMap)
 
   // deletion-vector sidecar schema: the PART-file URI (as Spark's
   // `_metadata.file_path` renders it — writeBatch dirs hold several part
@@ -2423,9 +2378,10 @@ object TxLog {
   def optimize(spark: SparkSession, dir: String, name: String,
       targetFiles: Int = 1): Int = {
     require(targetFiles >= 1, s"targetFiles must be >= 1: $targetFiles")
-    val entries = liveEntries(dir)
+    val s = snapshot(dir)
+    val entries = s.entries
     if (entries.size <= targetFiles) return 0
-    val files = entries.map(_._1)
+    val files = s.files
     // union of stat columns across the replaced files' blobs — the
     // dimensions someone already paid to make prunable stay prunable
     val statCols = entries.flatMap(e => statColsOf(e._2)).distinct
@@ -2435,11 +2391,11 @@ object TxLog {
     // The dv snapshot the read went through is threaded into the commit
     // as basedOnDvs (ADVICE r11): a DV delete landing between this read
     // and the swap must abort the swap, not be silently materialized away
-    val dvSnap = liveDvs(dir)
+    val dvSnap = s.dvs
     // nullFill: a compaction of files that evolved apart (post-addColumn
     // inserts) must union their schemas, not inherit one footer's —
     // dropping the evolved column here would be silent data loss
-    val snap = readMasked(spark, files, dvSnap, nullFill = columnTypes(dir))
+    val snap = readMasked(spark, files, dvSnap, nullFill = s.colTypes)
     val compacted = (statCols.headOption match {
       case Some(c) if targetFiles > 1 => snap.repartitionByRange(
         targetFiles, org.apache.spark.sql.functions.col(c))
@@ -2489,7 +2445,8 @@ object TxLog {
   def optimizeIncremental(spark: SparkSession, dir: String, name: String,
       smallBytes: Long): Int = {
     require(smallBytes >= 1, s"smallBytes must be >= 1: $smallBytes")
-    val entries = liveEntries(dir)
+    val s = snapshot(dir)
+    val entries = s.entries
     def bytesOf(p: String): Long = {
       val path = new Path(p)
       val fs = fsOf(path)
@@ -2500,10 +2457,9 @@ object TxLog {
     if (small.size < 2) return 0
     val smallPaths = small.map(_._1)
     val statCols = small.flatMap(e => statColsOf(e._2)).distinct
-    val dvSnap = liveDvs(dir)
+    val dvSnap = s.dvs
     val compacted =
-      readMasked(spark, smallPaths, dvSnap,
-        nullFill = columnTypes(dir)).coalesce(1)
+      readMasked(spark, smallPaths, dvSnap, nullFill = s.colTypes).coalesce(1)
     val st =
       if (statCols.isEmpty) None else columnStatsMulti(compacted, statCols)
     commitRewrite(dir,
@@ -2556,11 +2512,12 @@ object TxLog {
     require(cols.size >= 2, s"zorder needs >= 2 columns: ${cols.size}")
     require(cols.distinct.size == cols.size,
       s"zorder columns must be distinct: ${cols.mkString(", ")}")
-    val files = liveFiles(dir)
+    val s = snapshot(dir)
+    val files = s.files
     if (files.isEmpty) return 0
-    val dvSnap = liveDvs(dir)
+    val dvSnap = s.dvs
     val snap = readMasked(spark, files, dvSnap,
-      nullFill = columnTypes(dir)).localCheckpoint()
+      nullFill = s.colTypes).localCheckpoint()
     val withZ =
       try {
         // ONE quantile job for every dimension (the multi-column
@@ -2630,20 +2587,19 @@ object TxLog {
     * deleting anything — the operator's pre-flight check before giving
     * up pre-checkpoint time travel's leftovers. */
   def vacuum(dir: String, dryRun: Boolean): Seq[String] = {
-    val latest = latestVersion(dir)
-    if (latest == 0) return Nil
+    val names = listLog(dir)
+    if (latestOf(names) == 0) return Nil
     // every version a reader could still resolve: one live-set resolution
     // per manifest/checkpoint file PRESENT in the log; a version whose
     // pre-checkpoint prefix was expired raises the missing-manifest error
     // and is — by exactly that token — unreachable, so it holds nothing
-    val names = listLog(dir)
     val versions = (names.collect { case ManifestName(d) => d.toInt } ++
       names.collect { case CheckpointName(d) => d.toInt }).distinct.sorted
     // a version's reachable footprint is its data files PLUS the
     // deletion-vector sidecar dirs its bindings reference — a swept
     // sidecar would silently resurrect deleted rows on the next read
     val reachable = versions.flatMap { v =>
-      try { val (e, d) = resolveState(dir, v); e.map(_._1) ++ d.values }
+      try { val s = snapshotIn(dir, names, v); s.files ++ s.dvs.values }
       catch { case _: IllegalStateException => Nil }
     }.toSet
     val dataDir = new Path(dir, "data")
@@ -2693,21 +2649,20 @@ object TxLog {
     * set — idempotence, same contract as [[optimize]]. */
   def restore(dir: String, toVersion: Int): Int = {
     require(toVersion >= 1, s"toVersion must be >= 1: $toVersion")
-    val (target, targetDvM, targetCm) = resolveFull(dir, toVersion)
-    val (current, currentDvM, currentCm) = resolveFull(dir, -1)
-    val targetDv = targetDvM.toMap
-    val currentDv = currentDvM.toMap
-    val currentPaths = current.map(_._1).toSet
-    val targetPaths = target.map(_._1).toSet
-    val add = target.filterNot { case (p, _) => currentPaths(p) }
+    val names = listLog(dir) // both ends from one listing
+    val target = snapshotIn(dir, names, toVersion)
+    val current = snapshotIn(dir, names, -1)
+    val currentPaths = current.files.toSet
+    val targetPaths = target.files.toSet
+    val add = target.entries.filterNot { case (p, _) => currentPaths(p) }
     val addSet = add.map(_._1).toSet
-    val remove = current.map(_._1).filterNot(targetPaths)
+    val remove = current.files.filterNot(targetPaths)
     // deletion-vector reconciliation: a file live at the target must end
     // up bound to the target's sidecar (or unbound, `-`) — replay clears
     // the binding on re-add, so compare against the post-commit default
-    val dvSets = target.map(_._1).flatMap { p =>
-      val want = targetDv.get(p)
-      val haveAfter = if (addSet(p)) None else currentDv.get(p)
+    val dvSets = target.files.flatMap { p =>
+      val want = target.dvs.get(p)
+      val haveAfter = if (addSet(p)) None else current.dvs.get(p)
       if (want == haveAfter) None else Some(p -> want)
     }
     // column-mapping reconciliation: a restore across a rename/drop must
@@ -2716,28 +2671,27 @@ object TxLog {
     // now-mapped table restores identity behavior via the `colmap -`
     // clear (Some(Seq.empty) is the API sentinel that renders it).
     val cmSet: Option[Seq[(String, String)]] =
-      if (targetCm.m == currentCm.m) None
-      else targetCm.m.orElse(Some(Seq.empty))
+      if (target.colMap == current.colMap) None
+      else target.colMap.orElse(Some(Seq.empty))
+    // restate the target's entries, drop names only the current has
+    def restate(want: Seq[(String, String)], have: Seq[(String, String)]) =
+      want.map { case (k, v) => (k, Some(v)) } ++
+        have.map(_._1).filterNot(want.toMap.contains).map(_ -> None)
     // addColumn type registry reconciles INDEPENDENTLY of the mapping
     // (a mapping-free addColumn on an unmapped table carries no colmap
-    // at all): restate the target's registry and explicitly drop
-    // entries only the current version has. When a colmap also
-    // restates, its line lands FIRST in the commit body (it prunes),
-    // then these explicit lines apply — covering a drop BETWEEN target
-    // and now that pruned a type the target still needs (a phys's type
-    // never changes, so restating is always safe).
+    // at all). When a colmap also restates, its line lands FIRST in the
+    // commit body (it prunes), then these explicit lines apply —
+    // covering a drop BETWEEN target and now that pruned a type the
+    // target still needs (a phys's type never changes, so restating is
+    // always safe).
     val typeSet: Seq[(String, Option[String])] =
-      if (targetCm.types == currentCm.types && cmSet.isEmpty) Nil
-      else targetCm.types.toSeq.map { case (p, t) => (p, Some(t)) } ++
-        currentCm.types.keys.filterNot(targetCm.types.contains)
-          .map(p => (p, None: Option[String])).toSeq
-    // CHECK constraints roll back with the snapshot: restate the
-    // target's set, drop names only the current version has
+      if (target.colTypes.toMap == current.colTypes.toMap && cmSet.isEmpty)
+        Nil
+      else restate(target.colTypes, current.colTypes)
+    // CHECK constraints roll back with the snapshot
     val checkSet: Seq[(String, Option[String])] =
-      if (targetCm.checks == currentCm.checks) Nil
-      else targetCm.checks.toSeq.map { case (n, e) => (n, Some(e)) } ++
-        currentCm.checks.keys.filterNot(targetCm.checks.contains)
-          .map(n => (n, None: Option[String])).toSeq
+      if (target.checks.toMap == current.checks.toMap) Nil
+      else restate(target.checks, current.checks)
     if (add.isEmpty && remove.isEmpty && dvSets.isEmpty && cmSet.isEmpty
         && typeSet.isEmpty && checkSet.isEmpty)
       return 0
@@ -2807,11 +2761,15 @@ object TxLog {
       nullFill: Seq[(String, String)] = Nil,
       stats: Map[String, Option[String]] = Map.empty): Seq[String] = {
     if (probeFiles.isEmpty) Seq.empty
-    else probe(readMasked(spark, probeFiles, dvs, withPos = true,
-      nullFill = nullFill, stats = stats))
-      .select(DvFileCol).distinct().collect()
-      .map(r => batchDirOf(r.getString(0))).distinct.sorted.toSeq
+    else batchDirsOf(probe(readMasked(spark, probeFiles, dvs, withPos = true,
+      nullFill = nullFill, stats = stats)))
   }
+
+  /** The batch dirs holding the rows of a `withPos`-tagged frame — a
+    * collect bounded by the number of matched PART FILES. */
+  private def batchDirsOf(tagged: DataFrame): Seq[String] =
+    tagged.select(DvFileCol).distinct().collect()
+      .map(r => batchDirOf(r.getString(0))).distinct.sorted.toSeq
 
   /** Write one rewrite output, then derive emptiness and fresh manifest
     * stats from the WRITTEN file (a columnar read of just the stat
@@ -2836,34 +2794,39 @@ object TxLog {
     }
   }
 
+  /** Touched batch dirs (normalized, as [[probeTouched]] returns them)
+    * → the snapshot's manifest paths, refusing loudly on any identity
+    * failure — a silent partial rewrite or bind is data loss. */
+  private def manifestPaths(snap: Snapshot, touched: Seq[String],
+      what: String): Seq[String] = {
+    val byNorm = snap.files.map(p => normPath(p) -> p).toMap
+    val paths = touched.flatMap(byNorm.get)
+    require(paths.size == touched.size,
+      s"txlog: ${touched.size - paths.size} matched batch dirs did not " +
+        s"map back to a manifest path of ${snap.dir} — refusing a " +
+        s"partial $what")
+    paths
+  }
+
   /** Shared copy-on-write commit scaffolding of [[deleteWhere]] and the
-    * merge family: map touched batch dirs back to their manifest paths
-    * (refusing loudly on any identity failure — a silent partial rewrite
-    * is data loss), rewrite each via `remainderOf` with its original
-    * stat columns re-derived, and swap atomically together with
-    * `extraAdds`. Returns the commit version, or 0 when the verb
-    * changes nothing. */
-  private def rewriteTouched(spark: SparkSession, dir: String, name: String,
-      entries: Seq[(String, Option[String])], touched: Seq[String],
-      remainderOf: String => DataFrame,
-      extraAdds: Seq[(String, Option[String])], what: String,
-      basedOnDvs: Option[Map[String, String]] = None): Int = {
-    val byNorm = entries.map(e => normPath(e._1) -> e._1).toMap
-    val statsByNorm = entries.map { case (p, st) => normPath(p) -> st }.toMap
-    val removes = touched.flatMap(byNorm.get)
-    require(removes.size == touched.size,
-      s"txlog: ${touched.size - removes.size} matched batch dirs did not " +
-        s"map back to a manifest path of $dir — refusing a partial $what")
+    * merge family: map touched batch dirs back to their manifest paths,
+    * rewrite each via `remainderOf` with its original stat columns
+    * re-derived, and swap atomically together with `extraAdds`. The
+    * `remainderOf` closures read each touched dir THROUGH the snapshot's
+    * deletion vectors, so the swap is based on them: a DV rebind landing
+    * between that masked read and this commit aborts it (ADVICE r11).
+    * Returns the commit version, or 0 when the verb changes nothing. */
+  private def rewriteTouched(spark: SparkSession, snap: Snapshot,
+      name: String, touched: Seq[String], remainderOf: String => DataFrame,
+      extraAdds: Seq[(String, Option[String])], what: String): Int = {
+    val removes = manifestPaths(snap, touched, what)
     val rewrites = removes.zipWithIndex.flatMap { case (p, i) =>
-      writeRewrite(spark, dir, s"${name}_d$i", remainderOf(p),
-        statColsOf(statsByNorm(normPath(p))))
+      writeRewrite(spark, snap.dir, s"${name}_d$i", remainderOf(p),
+        statColsOf(snap.stats(p)))
     }
     val adds = rewrites ++ extraAdds
     if (adds.isEmpty && removes.isEmpty) 0
-    // basedOnDvs: the remainderOf closures read each touched dir THROUGH
-    // the dv snapshot the caller resolved — a DV rebind landing between
-    // that masked read and this commit must abort the swap (ADVICE r11)
-    else commitRewrite(dir, adds, removes, basedOnDvs = basedOnDvs)
+    else commitRewrite(snap.dir, adds, removes, basedOnDvs = Some(snap.dvs))
   }
 
   /** Copy-on-write DELETE — remove every live row satisfying `predicate`
@@ -2889,23 +2852,22 @@ object TxLog {
   def deleteWhere(spark: SparkSession, dir: String, name: String,
       predicate0: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions._
-    val (entries, dvM, cmb) = resolveFull(dir, -1)
-    if (entries.isEmpty) return 0
-    val nf = cmb.types.toSeq
-    val predicate = dmlColumn(cmb.m, predicate0, "DELETE")
-    val dvs = dvM.toMap
+    val snap = snapshot(dir)
+    if (snap.entries.isEmpty) return 0
+    val nf = snap.colTypes
+    val predicate = dmlColumn(snap.colMap, predicate0, "DELETE")
     // the probe scan's pushed predicate skips stats-disjoint files at
     // planning (the readPruned trust contract, applied to DML probes)
-    val touched = probeTouched(spark, entries.map(_._1), dvs,
-      _.filter(predicate), nullFill = nf, stats = entries.toMap)
+    val touched = probeTouched(spark, snap.files, snap.dvs,
+      _.filter(predicate), nullFill = nf, stats = snap.stats)
     // keep = NOT predicate OR predicate-is-null (SQL DELETE keeps
     // null-predicate rows); per-dir read keeps untouched dirs untouched;
     // a rewrite of a DV-bound dir reads through its mask (materializing
     // the vector) — raw reads here would resurrect masked rows
-    rewriteTouched(spark, dir, name, entries, touched,
-      p => readMasked(spark, Seq(p), dvs, nullFill = nf)
+    rewriteTouched(spark, snap, name, touched,
+      p => readMasked(spark, Seq(p), snap.dvs, nullFill = nf)
         .filter(!coalesce(predicate, lit(false))),
-      extraAdds = Nil, what = "delete", basedOnDvs = Some(dvs))
+      extraAdds = Nil, what = "delete")
   }
 
   /** REPLACE WHERE — atomically swap every live row satisfying
@@ -2939,13 +2901,12 @@ object TxLog {
     import org.apache.spark.sql.functions._
     val pinned = df.localCheckpoint() // 3 consumers: guard, checks, write
     try {
-      val (entries, dvM, cmb) = resolveFull(dir, -1)
-      val nf = cmb.types.toSeq
-      val dvs = dvM.toMap
+      val snap = snapshot(dir)
+      val nf = snap.colTypes
       // validate the predicate against the table's LOGICAL schema first
       // (the dmlColumn discipline: a retired physical name gets the
       // instructive error, not an unresolved-column analysis failure)
-      val predicate = dmlColumn(cmb.m, predicate0, "REPLACE WHERE")
+      val predicate = dmlColumn(snap.colMap, predicate0, "REPLACE WHERE")
       val bad = pinned
         .agg(sum(when(coalesce(predicate0, lit(false)), 0L).otherwise(1L)))
         .head()
@@ -2954,11 +2915,11 @@ object TxLog {
         s"txlog: replaceWhere source carries $outside row(s) that do NOT " +
           "satisfy the predicate — a replace must stay inside its own " +
           "window; nothing committed")
-      enforceChecks(spark, dir, pinned, "replaceWhere")
+      enforceChecks(snap, pinned, "replaceWhere")
       // batch lands under PHYSICAL names on a mapped table (the
       // appendMapped translation, minus fresh-column extension: a
       // replace must match the logical schema it replaces into)
-      val physDf = cmb.m match {
+      val physDf = snap.colMap match {
         case None => pinned
         case Some(m) =>
           val known = m.map { case (p, l) => l -> p }.toMap
@@ -2975,18 +2936,17 @@ object TxLog {
           val p = writeBatch(physDf, dir, name)
           Seq(p -> autoStatsFor(spark, p, autoStatsCols))
         }
-      if (entries.isEmpty) {
+      if (snap.entries.isEmpty) {
         if (extraAdds.isEmpty) return 0
         return commitWithStats(dir, extraAdds)
       }
-      val touched = probeTouched(spark, entries.map(_._1), dvs,
-        _.filter(predicate), nullFill = nf, stats = entries.toMap)
+      val touched = probeTouched(spark, snap.files, snap.dvs,
+        _.filter(predicate), nullFill = nf, stats = snap.stats)
       if (touched.isEmpty && extraAdds.isEmpty) return 0
-      rewriteTouched(spark, dir, s"${name}_rw", entries, touched,
-        p => readMasked(spark, Seq(p), dvs, nullFill = nf)
+      rewriteTouched(spark, snap, s"${name}_rw", touched,
+        p => readMasked(spark, Seq(p), snap.dvs, nullFill = nf)
           .filter(!coalesce(predicate, lit(false))),
-        extraAdds = extraAdds, what = "replaceWhere",
-        basedOnDvs = Some(dvs))
+        extraAdds = extraAdds, what = "replaceWhere")
     } finally graft.core.Checkpoints.release(pinned)
   }
 
@@ -3031,38 +2991,37 @@ object TxLog {
   def deleteWhereDV(spark: SparkSession, dir: String, name: String,
       predicate0: org.apache.spark.sql.Column): Int = {
     import org.apache.spark.sql.functions._
-    val (entries, dvM, cmb) = resolveFull(dir, -1)
-    if (entries.isEmpty) return 0
-    val predicate = dmlColumn(cmb.m, predicate0, "DELETE (DV)")
-    val dvs = dvM.toMap
-    val matched = readMasked(spark, entries.map(_._1), dvs, withPos = true,
-        nullFill = cmb.types.toSeq, stats = entries.toMap)
+    val snap = snapshot(dir)
+    if (snap.entries.isEmpty) return 0
+    val predicate = dmlColumn(snap.colMap, predicate0, "DELETE (DV)")
+    val matched = readMasked(spark, snap.files, snap.dvs, withPos = true,
+        nullFill = snap.colTypes, stats = snap.stats)
       .filter(coalesce(predicate, lit(false)))
       .select(DvFileCol, DvPosCol).localCheckpoint()
     try {
-      // file-count-sized collect: which part files hold matches
-      val touchedParts = matched.select(DvFileCol).distinct()
-        .collect().map(_.getString(0))
-      if (touchedParts.isEmpty) return 0
-      val byNorm = entries.map(e => normPath(e._1) -> e._1).toMap
-      val touchedDirs =
-        touchedParts.map(batchDirOf).distinct.sorted.toSeq
-      val touched = touchedDirs.flatMap(byNorm.get)
-      require(touched.size == touchedDirs.size,
-        s"txlog: ${touchedDirs.size - touched.size} matched batch dirs " +
-          s"did not map back to a manifest path of $dir — refusing a " +
-          "partial deletion-vector bind")
-      // cumulative sidecar: new coordinates ∪ every coordinate the
-      // touched files' existing sidecars already carry (matched was
-      // computed through the old mask, so the union is disjoint)
-      val existing = touched.flatMap(dvs.get).distinct
-      val combined =
-        if (existing.isEmpty) matched
-        else matched.unionByName(dvRows(spark, existing))
-      val dvPath = writeBatch(combined, dir, name)
-      commitRewrite(dir, Nil, Nil,
-        dvSets = touched.map(_ -> Some(dvPath)), basedOnDvs = Some(dvs))
+      val touched =
+        manifestPaths(snap, batchDirsOf(matched), "deletion-vector bind")
+      if (touched.isEmpty) return 0
+      bindDvs(spark, snap, touched, matched, name, adds = Nil)
     } finally graft.core.Checkpoints.release(matched)
+  }
+
+  /** The merge-on-read commit of [[deleteWhereDV]] and [[updateWhereDV]]:
+    * ONE cumulative sidecar — the new `coords` ∪ every coordinate the
+    * touched files' existing sidecars already carry (`coords` was matched
+    * through the old mask, so the union is disjoint) — bound to every
+    * touched file and committed together with `adds`, based on the
+    * snapshot's bindings. */
+  private def bindDvs(spark: SparkSession, snap: Snapshot,
+      touched: Seq[String], coords: DataFrame, sidecarName: String,
+      adds: Seq[(String, Option[String])]): Int = {
+    val existing = touched.flatMap(snap.dvs.get).distinct
+    val combined =
+      if (existing.isEmpty) coords
+      else coords.unionByName(dvRows(spark, existing))
+    val dvPath = writeBatch(combined, snap.dir, sidecarName)
+    commitRewrite(snap.dir, adds, Nil,
+      dvSets = touched.map(_ -> Some(dvPath)), basedOnDvs = Some(snap.dvs))
   }
 
   /** Targeted deletion-vector MATERIALIZATION — the maintenance verb of
@@ -3087,8 +3046,8 @@ object TxLog {
       minMaskedFraction: Double): Int = {
     require(minMaskedFraction > 0.0 && minMaskedFraction <= 1.0,
       s"minMaskedFraction must be in (0,1]: $minMaskedFraction")
-    val (entries, dvM) = resolveState(dir, -1)
-    val dvs = dvM.toMap
+    val snap = snapshot(dir)
+    val dvs = snap.dvs
     if (dvs.isEmpty) return 0
     // masked-row count per batch dir, attributed from each file's OWN
     // sidecar (bindings are cumulative, so a file's sidecar carries every
@@ -3100,7 +3059,7 @@ object TxLog {
           .groupBy(r => batchDirOf(r.getString(0)))
           .map { case (d, rs) => d -> rs.map(_.getLong(1)).sum }
       }.toMap
-    val victims = entries.collect {
+    val victims = snap.entries.collect {
       case (p, _) if dvs.contains(p) &&
           maskedByDir(dvs(p)).getOrElse(normPath(p), 0L) > 0L => p
     }.filter { p =>
@@ -3109,10 +3068,9 @@ object TxLog {
       total == 0L || masked.toDouble / total >= minMaskedFraction
     }
     if (victims.isEmpty) return 0
-    val nf = columnTypes(dir)
-    rewriteTouched(spark, dir, name, entries, victims.map(normPath),
-      p => readMasked(spark, Seq(p), dvs, nullFill = nf),
-      extraAdds = Nil, what = "optimizeDv", basedOnDvs = Some(dvs))
+    rewriteTouched(spark, snap, name, victims.map(normPath),
+      p => readMasked(spark, Seq(p), dvs, nullFill = snap.colTypes),
+      extraAdds = Nil, what = "optimizeDv")
   }
 
   /** MERGE-ON-READ UPDATE via deletion vectors — [[updateWhereDV]] is to
@@ -3136,71 +3094,73 @@ object TxLog {
     require(set0.map(_._1).distinct.size == set0.size,
       s"updateWhereDV: a column may appear at most once in SET " +
         s"(got ${set0.map(_._1).mkString(", ")})")
-    val (entries, dvM, cmb) = resolveFull(dir, -1)
-    if (entries.isEmpty) return 0
-    val cm = cmb.m
-    val nf = cmb.types.toSeq
-    val predicate = dmlColumn(cm, predicate0, "UPDATE (DV)")
-    val set = set0.map { case (n, e) =>
-      cm.fold(n)(dmlPhysicalName(_, n, "UPDATE (DV) SET")) ->
-        dmlColumn(cm, e, "UPDATE (DV) SET")
-    }
-    val dvs = dvM.toMap
-    // head-file columns plus typed metadata adds (a just-added column is
-    // a legal SET target even before any file carries it)
-    val tableCols =
-      spark.read.parquet(entries.head._1).columns.toSet ++ nf.map(_._1)
-    val missing = set.map(_._1).filterNot(tableCols)
-    require(missing.isEmpty,
-      s"updateWhereDV: SET targets column(s) absent from the table: " +
-        s"${missing.mkString(", ")}")
-    val matched = readMasked(spark, entries.map(_._1), dvs, withPos = true,
-        nullFill = nf, stats = entries.toMap)
+    val snap = snapshot(dir)
+    if (snap.entries.isEmpty) return 0
+    val predicate = dmlColumn(snap.colMap, predicate0, "UPDATE (DV)")
+    val set = setClause(spark, snap, set0, "updateWhereDV", "UPDATE (DV)")
+    val matched = readMasked(spark, snap.files, snap.dvs, withPos = true,
+        nullFill = snap.colTypes, stats = snap.stats)
       .filter(coalesce(predicate, lit(false))).localCheckpoint()
     try {
-      val touchedParts = matched.select(DvFileCol).distinct()
-        .collect().map(_.getString(0))
-      if (touchedParts.isEmpty) return 0
-      val byNorm = entries.map(e => normPath(e._1) -> e._1).toMap
-      val statsByNorm =
-        entries.map { case (p, st) => normPath(p) -> st }.toMap
-      val touchedDirs =
-        touchedParts.map(batchDirOf).distinct.sorted.toSeq
-      val touched = touchedDirs.flatMap(byNorm.get)
-      require(touched.size == touchedDirs.size,
-        s"txlog: ${touchedDirs.size - touched.size} matched batch dirs " +
-          s"did not map back to a manifest path of $dir — refusing a " +
-          "partial deletion-vector bind")
-      val setByCol = set.toMap
-      val types = matched.schema
-        .map(f => f.name -> f.dataType).toMap
+      val touched =
+        manifestPaths(snap, batchDirsOf(matched), "deletion-vector bind")
+      if (touched.isEmpty) return 0
       val dataCols = matched.columns.toSeq
         .filterNot(c => c == DvFileCol || c == DvPosCol)
-      // every matched row updates (the predicate already selected them);
-      // one select over the pre-update row, so `SET a = b, b = a` swaps
-      val updated = matched.select(dataCols.map { c =>
-        setByCol.get(c) match {
-          case Some(e) => e.cast(types(c)).as(c)
-          case None    => col(c)
-        }
-      }: _*)
+      // every matched row updates (the predicate already selected them)
+      val updated = applySet(matched, dataCols, set)
       // table constraints see the POST-SET rows, under logical names
-      enforceChecks(spark, dir, applyMapping(updated, cm), "UPDATE (DV)")
-      val statCols = touched
-        .flatMap(p => statColsOf(statsByNorm(normPath(p)))).distinct
+      enforceChecks(snap, applyMapping(updated, snap.colMap), "UPDATE (DV)")
+      val statCols = touched.flatMap(p => statColsOf(snap.stats(p))).distinct
         .filter(dataCols.contains)
       val newFile = writeBatch(updated, dir, s"${name}_upd")
       val st =
         if (statCols.isEmpty) None else columnStatsMulti(updated, statCols)
-      val existing = touched.flatMap(dvs.get).distinct
-      val coords = matched.select(DvFileCol, DvPosCol)
-      val combined =
-        if (existing.isEmpty) coords
-        else coords.unionByName(dvRows(spark, existing))
-      val dvPath = writeBatch(combined, dir, s"${name}_dv")
-      commitRewrite(dir, Seq(newFile -> st), Nil,
-        dvSets = touched.map(_ -> Some(dvPath)), basedOnDvs = Some(dvs))
+      bindDvs(spark, snap, touched, matched.select(DvFileCol, DvPosCol),
+        s"${name}_dv", adds = Seq(newFile -> st))
     } finally graft.core.Checkpoints.release(matched)
+  }
+
+  /** The SET half of [[updateWhere]] and [[updateWhereDV]]: assignments
+    * keyed by PHYSICAL column, validated BEFORE any probe against the
+    * snapshot's head-file columns plus its typed metadata adds (a
+    * just-added column is a legal SET target before any file carries
+    * it). Inside a rewrite the check would be data-dependent — a typo'd
+    * column on a no-match predicate would return 0 and a scheduled job
+    * would report success forever. */
+  private def setClause(spark: SparkSession, snap: Snapshot,
+      set0: Seq[(String, org.apache.spark.sql.Column)], api: String,
+      verb: String): Map[String, org.apache.spark.sql.Column] = {
+    val set = set0.map { case (n, e) =>
+      snap.colMap.fold(n)(dmlPhysicalName(_, n, s"$verb SET")) ->
+        dmlColumn(snap.colMap, e, s"$verb SET")
+    }
+    val tableCols = spark.read.parquet(snap.files.head).columns.toSet ++
+      snap.colTypes.map(_._1)
+    val missing = set.map(_._1).filterNot(tableCols)
+    require(missing.isEmpty,
+      s"$api: SET targets column(s) absent from the table: " +
+        s"${missing.mkString(", ")}")
+    set.toMap
+  }
+
+  /** `cols` of `df` with the SET assignments applied — one select over
+    * the PRE-update row, so `SET a = b, b = a` swaps instead of
+    * chaining; each assignment casts to its column's existing type, so
+    * the schema is invariant. With `hit`, only rows it selects update. */
+  private def applySet(df: DataFrame, cols: Seq[String],
+      set: Map[String, org.apache.spark.sql.Column],
+      hit: Option[org.apache.spark.sql.Column] = None): DataFrame = {
+    import org.apache.spark.sql.functions.{col, when}
+    val types = df.schema.map(f => f.name -> f.dataType).toMap
+    df.select(cols.map { c =>
+      set.get(c) match {
+        case Some(e) =>
+          hit.fold(e.cast(types(c)))(h =>
+            when(h, e.cast(types(c))).otherwise(col(c))).as(c)
+        case None => col(c)
+      }
+    }: _*)
   }
 
   /** Copy-on-write UPDATE — apply the `set` assignments to every live
@@ -3235,58 +3195,29 @@ object TxLog {
     require(set0.map(_._1).distinct.size == set0.size,
       s"updateWhere: a column may appear at most once in SET " +
         s"(got ${set0.map(_._1).mkString(", ")})")
-    val (entries, dvM, cmb) = resolveFull(dir, -1)
-    if (entries.isEmpty) return 0
-    val cm = cmb.m
-    val nf = cmb.types.toSeq
-    val predicate = dmlColumn(cm, predicate0, "UPDATE")
-    val set = set0.map { case (n, e) =>
-      cm.fold(n)(dmlPhysicalName(_, n, "UPDATE SET")) ->
-        dmlColumn(cm, e, "UPDATE SET")
-    }
-    // validate SET columns BEFORE the probe: inside the rewrite lambda the
-    // check would be data-dependent — a typo'd column on a no-match
-    // predicate would return 0 and a scheduled job would report success
-    // forever (one footer read against the snapshot's schema; typed
-    // metadata adds are legal SET targets before any file carries them)
-    val tableCols =
-      spark.read.parquet(entries.head._1).columns.toSet ++ nf.map(_._1)
-    val missing = set.map(_._1).filterNot(tableCols)
-    require(missing.isEmpty,
-      s"updateWhere: SET targets column(s) absent from the table: " +
-        s"${missing.mkString(", ")}")
-    val dvs = dvM.toMap
-    val touched = probeTouched(spark, entries.map(_._1), dvs,
-      _.filter(predicate), nullFill = nf, stats = entries.toMap)
-    val setByCol = set.toMap
+    val snap = snapshot(dir)
+    if (snap.entries.isEmpty) return 0
+    val nf = snap.colTypes
+    val predicate = dmlColumn(snap.colMap, predicate0, "UPDATE")
+    val set = setClause(spark, snap, set0, "updateWhere", "UPDATE")
+    val touched = probeTouched(spark, snap.files, snap.dvs,
+      _.filter(predicate), nullFill = nf, stats = snap.stats)
     val hit = coalesce(predicate, lit(false))
     // table constraints see the POST-SET matched rows under logical
     // names — one extra scan of the touched files, paid only when the
     // table carries constraints
-    if (touched.nonEmpty && cmb.checks.nonEmpty) {
-      val m = readMasked(spark, entries.map(_._1), dvs, nullFill = nf,
-        stats = entries.toMap).filter(hit)
-      val tps = m.schema.map(f => f.name -> f.dataType).toMap
-      val preview = m.select(m.columns.toSeq.map { c =>
-        setByCol.get(c) match {
-          case Some(e) => e.cast(tps(c)).as(c)
-          case None    => col(c)
-        }
-      }: _*)
-      enforceChecks(spark, dir, applyMapping(preview, cm), "UPDATE")
+    if (touched.nonEmpty && snap.checks.nonEmpty) {
+      val m = readMasked(spark, snap.files, snap.dvs, nullFill = nf,
+        stats = snap.stats).filter(hit)
+      enforceChecks(snap, applyMapping(applySet(m, m.columns.toSeq, set),
+        snap.colMap), "UPDATE")
     }
-    rewriteTouched(spark, dir, name, entries, touched,
+    rewriteTouched(spark, snap, name, touched,
       { p =>
-        val df = readMasked(spark, Seq(p), dvs, nullFill = nf)
-        val types = df.schema.map(f => f.name -> f.dataType).toMap
-        df.select(df.columns.toSeq.map { c =>
-          setByCol.get(c) match {
-            case Some(e) => when(hit, e.cast(types(c))).otherwise(col(c)).as(c)
-            case None    => col(c)
-          }
-        }: _*)
+        val df = readMasked(spark, Seq(p), snap.dvs, nullFill = nf)
+        applySet(df, df.columns.toSeq, set, hit = Some(hit))
       },
-      extraAdds = Nil, what = "update", basedOnDvs = Some(dvs))
+      extraAdds = Nil, what = "update")
   }
 
   /** CONVERT an existing plain-parquet directory into a TxLog table,
@@ -3352,25 +3283,23 @@ object TxLog {
       source: DataFrame, keys: Seq[String]): Int = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "deleteByKeys needs at least one key column")
-    val (entries, dvM, cmb) = resolveFull(dir, -1)
-    if (entries.isEmpty) return 0
-    val cm = cmb.m
-    val nf = cmb.types.toSeq
+    val snap = snapshot(dir)
+    if (snap.entries.isEmpty) return 0
+    val nf = snap.colTypes
     val physKeys = keys.map(k =>
-      cm.fold(k)(dmlPhysicalName(_, k, "MERGE DELETE key")))
+      snap.colMap.fold(k)(dmlPhysicalName(_, k, "MERGE DELETE key")))
     val srcKeys = source
       .select(keys.zip(physKeys).map { case (l, p) => col(l).as(p) }: _*)
       .na.drop("any").distinct().localCheckpoint()
     try {
       if (srcKeys.isEmpty) return 0
-      val dvs = dvM.toMap
       val touched = probeTouched(spark,
-        keyPrunedProbeFiles(entries, srcKeys, physKeys), dvs,
+        keyPrunedProbeFiles(snap.entries, srcKeys, physKeys), snap.dvs,
         _.join(broadcast(srcKeys), physKeys, "left_semi"), nullFill = nf)
-      rewriteTouched(spark, dir, name, entries, touched,
-        p => readMasked(spark, Seq(p), dvs, nullFill = nf)
+      rewriteTouched(spark, snap, name, touched,
+        p => readMasked(spark, Seq(p), snap.dvs, nullFill = nf)
           .join(broadcast(srcKeys), physKeys, "left_anti"),
-        extraAdds = Nil, what = "deleteByKeys", basedOnDvs = Some(dvs))
+        extraAdds = Nil, what = "deleteByKeys")
     } finally graft.core.Checkpoints.release(srcKeys)
   }
 
@@ -3396,11 +3325,11 @@ object TxLog {
     * or 0 when `source` is empty. Fresh `name` per call. */
   def merge(spark: SparkSession, dir: String, name: String,
       source: DataFrame, keys: Seq[String]): Int = {
-    enforceChecks(spark, dir, source, "MERGE") // logical source rows
-    val cm = columnMapping(dir)
+    val snap = snapshot(dir)
+    enforceChecks(snap, source, "MERGE") // logical source rows
     val (physSource, physKeys) =
-      sourceToPhysical(cm, source, keys, "MERGE", passCols = Nil)
-    mergeImpl(spark, dir, name, identity, physSource, physKeys, cm = cm)
+      sourceToPhysical(snap.colMap, source, keys, "MERGE", passCols = Nil)
+    mergeImpl(spark, snap, name, identity, physSource, physKeys)
   }
 
   /** The write-side logical→physical half of the DML verbs on a
@@ -3454,14 +3383,14 @@ object TxLog {
         s"(columns: ${changes.columns.mkString(", ")})")
     // table constraints check the rows that will LAND (upserts); a
     // delete marker removes data and cannot violate a CHECK
-    enforceChecks(spark, dir,
+    val snap = snapshot(dir)
+    enforceChecks(snap,
       changes.filter(col(opCol) =!= deleteOp).drop(opCol), "APPLY CHANGES")
-    val cm = columnMapping(dir)
-    val (physChanges, physKeys) = sourceToPhysical(cm, changes, keys,
-      "APPLY CHANGES", passCols = Seq(opCol))
-    mergeImpl(spark, dir, name,
+    val (physChanges, physKeys) = sourceToPhysical(snap.colMap, changes,
+      keys, "APPLY CHANGES", passCols = Seq(opCol))
+    mergeImpl(spark, snap, name,
       k => k.filter(col(opCol) =!= deleteOp).drop(opCol), physChanges,
-      physKeys, opNullCheck = Some(opCol), cm = cm)
+      physKeys, opNullCheck = Some(opCol))
   }
 
   /** Manifest-stats pre-pruning of a key-probe scan ([[merge]],
@@ -3496,13 +3425,14 @@ object TxLog {
     * set, stats and source write all consume one materialization instead
     * of re-running the caller's (possibly expensive) feed plan per
     * action. */
-  private def mergeImpl(spark: SparkSession, dir: String, name: String,
+  private def mergeImpl(spark: SparkSession, snap: Snapshot, name: String,
       upsertsOf: DataFrame => DataFrame, keyedRaw: DataFrame,
-      keys: Seq[String], opNullCheck: Option[String] = None,
-      cm: Option[Seq[(String, String)]] = None): Int = {
+      keys: Seq[String], opNullCheck: Option[String] = None): Int = {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge needs at least one key column")
-    val entries = liveEntries(dir)
+    val dir = snap.dir
+    val cm = snap.colMap
+    val entries = snap.entries
     require(entries.nonEmpty,
       s"merge into an empty table $dir: commit the first batch instead")
     val keyed = keyedRaw.localCheckpoint()
@@ -3559,10 +3489,10 @@ object TxLog {
       }
       val srcKeys = nonNullKeyed.select(keys.map(col): _*).distinct()
       val probeFiles = keyPrunedProbeFiles(entries, nonNullKeyed, keys)
-      val dvs = liveDvs(dir)
+      val dvs = snap.dvs
       // typed metadata adds null-fill the probe/rewrite reads (a merge
       // KEYED on a just-added column is degenerate but must not crash)
-      val nf = if (cm.isEmpty) Nil else columnTypes(dir)
+      val nf = if (cm.isEmpty) Nil else snap.colTypes
       val touched = probeTouched(spark, probeFiles, dvs,
         _.join(broadcast(srcKeys), keys, "left_semi"), nullFill = nf)
       val extraAdds =
@@ -3575,10 +3505,10 @@ object TxLog {
             else columnStatsMulti(upserts, srcStatCols)
           Seq(writeBatch(upserts, dir, s"${name}_src") -> srcStats)
         }
-      rewriteTouched(spark, dir, name, entries, touched,
+      rewriteTouched(spark, snap, name, touched,
         p => readMasked(spark, Seq(p), dvs, nullFill = nf)
           .join(broadcast(srcKeys), keys, "left_anti"),
-        extraAdds, what = "merge", basedOnDvs = Some(dvs))
+        extraAdds, what = "merge")
     } finally graft.core.Checkpoints.release(keyed)
   }
 
@@ -3665,7 +3595,8 @@ object TxLog {
     * nested value leaf, one narrow distinct scan otherwise. */
   def partitionTuples(spark: SparkSession, dir: String,
       partCols: Seq[String]): Seq[Seq[Option[String]]] = {
-    val entries = liveEntries(dir)
+    val snap = snapshot(dir)
+    val entries = snap.entries
     require(entries.nonEmpty, s"txlog: $dir holds no files")
     val n = partCols.length
     val canonical = partCols.map(c => parsePartSpec(c).spec).mkString(",")
@@ -3678,7 +3609,7 @@ object TxLog {
       parsed.flatten.distinct.map(_.map(v =>
         if (v == HiveDefaultPartition) None else Some(v)))
     else
-      read(spark, dir)
+      readSnapshot(spark, snap)
         .select(partCols.map(c => parsePartSpec(c).derive): _*)
         .distinct().collect().map(r =>
           partCols.indices.map(i =>
@@ -3725,34 +3656,14 @@ object TxLog {
   def commitPartitionedCols(spark: SparkSession, dir: String, name: String,
       df: DataFrame, partCols: Seq[String], bloomBits: Int = 1024,
       extraStatsCols: Seq[String] = Nil,
-      txn: Option[(String, Long)] = None): Int = {
-    // pinned-claim discipline (see appendMapped): validate at a version,
-    // claim exactly that version + 1 — the leaves are already written,
-    // only the manifest line retries
-    var validatedV = latestVersion(dir)
-    enforceChecks(spark, dir, df, "partitioned append")
-    val adds = writePartitionLeaves(spark, dir, name, df,
-      partCols, bloomBits, extraStatsCols)
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      val v = latestVersion(dir)
-      if (v != validatedV) {
-        enforceChecks(spark, dir, df, "partitioned append")
-        validatedV = v
-      }
-      try out = commitWithStats(dir, adds, txn = txn, atVersion = v + 1)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt) // loop head re-validates + re-pins
-      }
+      txn: Option[(String, Long)] = None): Int =
+    // the leaves are written once; only the manifest line retries
+    pinnedIngest(snapshot(dir), df, "partitioned append") {
+      writePartitionLeaves(spark, dir, name, df, partCols, bloomBits,
+        extraStatsCols)
+    } { (snap, adds) =>
+      commitWithStats(dir, adds, txn = txn, atVersion = snap.version + 1)
     }
-    out
-  }
 
   /** Atomic partitioned full REPLACE — [[overwriteAll]]'s semantics at
     * the [[commitPartitioned]] value grain: one commit lands `df`'s
@@ -3770,38 +3681,11 @@ object TxLog {
   /** [[overwritePartitioned]] over a composite partition spec. */
   def overwritePartitionedCols(spark: SparkSession, dir: String,
       name: String, df: DataFrame, partCols: Seq[String],
-      bloomBits: Int = 1024, extraStatsCols: Seq[String] = Nil): Int = {
-    // pinned-claim discipline (see appendMapped)
-    var validatedV = latestVersion(dir)
-    enforceChecks(spark, dir, df, "partitioned overwrite")
-    val adds = writePartitionLeaves(spark, dir, name, df, partCols,
-      bloomBits, extraStatsCols)
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      val v = latestVersion(dir)
-      if (v != validatedV) {
-        enforceChecks(spark, dir, df, "partitioned overwrite")
-        validatedV = v
-      }
-      // like overwriteAll: a full replace on a MAPPED table restates the
-      // colmap to identity (Some(Nil)) — the new leaves carry logical
-      // names, and a stale mapping left in force would project wrong or
-      // missing columns on every subsequent read (ADVICE r13)
-      try out = commitWithStats(dir, adds, remove = liveFiles(dir, v),
-        colMap = if (columnMapping(dir, v).isDefined) Some(Nil) else None,
-        atVersion = v + 1)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt) // loop head re-validates + re-pins
-      }
-    }
-    out
-  }
+      bloomBits: Int = 1024, extraStatsCols: Seq[String] = Nil): Int =
+    pinnedIngest(snapshot(dir), df, "partitioned overwrite") {
+      writePartitionLeaves(spark, dir, name, df, partCols, bloomBits,
+        extraStatsCols)
+    }(replaceAll)
 
   /** TRUNCATE — one adds-empty remove-all commit: the table becomes
     * empty at the new version, time travel to the removed content is
@@ -3812,23 +3696,7 @@ object TxLog {
     * write, so the leaf writer can't express it — ADVICE r13). Returns
     * the commit version; a no-op (already empty, no mapping) still
     * commits so the verb is always visible in history. */
-  def truncate(dir: String): Int = {
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      try out = commitWithStats(dir, add = Nil, remove = liveFiles(dir),
-        colMap = if (columnMapping(dir).isDefined) Some(Nil) else None)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt)
-      }
-    }
-    out
-  }
+  def truncate(dir: String): Int = withSnapshot(dir)(replaceAll(_, Nil))
 
   /** The internal partition-copy column name for level `i` of a
     * partitioned ingest: `__pv` for the first (the historical
@@ -4017,36 +3885,16 @@ object TxLog {
           s"input frame?) — nothing committed, $base removed")
     }
     // per-leaf stats for the non-dirname columns in ONE distributed pass
-    // (the [[analyze]] shape: group by file identity, collect at
-    // part-file count) — a per-leaf read loop would cost one Spark job
-    // PER LEAF, a driver-side O(leaves) tax that dominates wide
+    // (the [[analyze]] shape) — a per-leaf read loop would cost one Spark
+    // job PER LEAF, a driver-side O(leaves) tax that dominates wide
     // partitioned ingests (a 10k-day table would pay 10k jobs)
-    import org.apache.spark.sql.functions.{col => fcol, input_file_name, max => fmax, min => fmin}
-    val extraByLeaf: Map[String, Seq[String]] =
+    val extraByDir: Map[String, Seq[String]] =
       if (statsCols.isEmpty) Map.empty
       else {
         val raw = spark.read.option("mergeSchema", "true")
           .parquet(leaves.map(_.toString): _*)
         val present = statsCols.filter(raw.columns.contains)
-        if (present.isEmpty) Map.empty
-        else {
-          val aggs = present.flatMap(c =>
-            Seq(fmin(fcol(c).cast("double")), fmax(fcol(c).cast("double"))))
-          val per = raw.withColumn("__f", input_file_name())
-            .groupBy(fcol("__f")).agg(aggs.head, aggs.tail: _*).collect()
-          val byDir = per.groupBy(r => batchDirOf(r.getString(0)))
-          leaves.map { leaf =>
-            val rows = byDir.getOrElse(normPath(leaf.toString), Array.empty)
-            val segs = present.zipWithIndex.flatMap { case (c, i) =>
-              val mns = rows.collect {
-                case r if !r.isNullAt(1 + 2 * i) => r.getDouble(1 + 2 * i) }
-              val mxs = rows.collect {
-                case r if !r.isNullAt(2 + 2 * i) => r.getDouble(2 + 2 * i) }
-              if (mns.isEmpty) None else Some(s"$c;${mns.min};${mxs.max}")
-            }
-            leaf.toString -> segs
-          }.toMap
-        }
+        if (present.isEmpty) Map.empty else rangeSegmentsByDir(raw, present)
       }
     leaves.map { leaf =>
       val raws = leafTuple(leaf.toString, specs.length).get
@@ -4087,8 +3935,8 @@ object TxLog {
       // a new days leaf; only the spec tag can tell OPTIMIZE / SHOW
       // PARTITIONS it is residue under the evolved spec)
       val specSeg = s"#sp#${encCol(specs.map(_.spec).mkString(","))}"
-      val segs = valueSegs ++ extraByLeaf.getOrElse(leaf.toString, Nil) :+
-        specSeg
+      val segs = valueSegs ++
+        extraByDir.getOrElse(normPath(leaf.toString), Nil) :+ specSeg
       leaf.toString -> Some(segs.mkString(","))
     }
   }
@@ -4126,7 +3974,8 @@ object TxLog {
     * rewrite. */
   def optimizePartitionedCols(spark: SparkSession, dir: String,
       name: String, partCols: Seq[String], bloomBits: Int = 1024): Int = {
-    val entries = liveEntries(dir)
+    val s = snapshot(dir)
+    val entries = s.entries
     if (entries.isEmpty) return 0
     val specs = partCols.map(parsePartSpec)
     val n = partCols.length
@@ -4141,8 +3990,8 @@ object TxLog {
     val residue = parsed.collect { case (p, None) => p }
     val byValue = parsed.collect { case (p, Some(t)) => (p, t) }
       .groupBy(_._2)
-    val dvSnap = liveDvs(dir)
-    val nf = columnTypes(dir)
+    val dvSnap = s.dvs
+    val nf = s.colTypes
     def toTuple(r: org.apache.spark.sql.Row): Seq[Option[String]] =
       partCols.indices.map(i =>
         if (r.isNullAt(i)) None else Some(r.getString(i)))
@@ -4168,6 +4017,30 @@ object TxLog {
       else writePartitionLeaves(spark, dir, name, snap, partCols,
         bloomBits, extraStatsCols = Nil)
     commitRewrite(dir, adds, victims, basedOnDvs = Some(dvSnap))
+  }
+
+  /** Per-batch-dir `col;min;max` range segments of `columns` over `raw`
+    * in ONE distributed pass: grouped by part file, collected at
+    * part-file count (never row count), folded to the batch dir
+    * ([[normPath]] grain). A column with no numeric value in a dir gets
+    * no segment there — [[columnStatsMulti]]'s rule. */
+  private def rangeSegmentsByDir(raw: DataFrame,
+      columns: Seq[String]): Map[String, Seq[String]] = {
+    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+    val aggs = columns.flatMap(c =>
+      Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
+    raw.withColumn("__f", input_file_name())
+      .groupBy(col("__f")).agg(aggs.head, aggs.tail: _*).collect()
+      .groupBy(r => batchDirOf(r.getString(0)))
+      .map { case (d, rows) =>
+        d -> columns.zipWithIndex.flatMap { case (c, i) =>
+          val mns = rows.collect {
+            case r if !r.isNullAt(1 + 2 * i) => r.getDouble(1 + 2 * i) }
+          val mxs = rows.collect {
+            case r if !r.isNullAt(2 + 2 * i) => r.getDouble(2 + 2 * i) }
+          if (mns.isEmpty) None else Some(s"$c;${mns.min};${mxs.max}")
+        }
+      }
   }
 
   /** ANALYZE — retro-fit manifest RANGE stats onto a table's live files
@@ -4196,42 +4069,24 @@ object TxLog {
     * commit version. */
   def analyze(spark: SparkSession, dir: String,
       columns0: Seq[String]): Int = {
-    import org.apache.spark.sql.functions._
     require(columns0.nonEmpty, "analyze needs at least one column")
-    var attempt = 0
-    var out = -1
-    while (out < 0) {
-      attempt += 1
-      val checkV = latestVersion(dir)
-      val (entries, dvM, cmb) = resolveFull(dir, checkV)
+    withSnapshot(dir) { snap =>
+      val entries = snap.entries
       require(entries.nonEmpty, s"txlog: analyze of empty table $dir")
       val columns = columns0.map(c =>
-        cmb.m.fold(c)(dmlPhysicalName(_, c, "ANALYZE")))
+        snap.colMap.fold(c)(dmlPhysicalName(_, c, "ANALYZE")))
       columns.foreach(c => require(
         !c.exists(ch => ch == ';' || ch == ',' || ch == '\t' || ch == '\n'),
         s"stats column name unsupported: $c"))
       val raw = spark.read.option("mergeSchema", "true")
-        .parquet(entries.map(_._1): _*)
+        .parquet(snap.files: _*)
       val missing = columns.filterNot(raw.columns.contains)
       require(missing.isEmpty,
         s"analyze: no such column(s): ${missing.mkString(", ")} " +
           s"(table columns: ${raw.columns.mkString(", ")})")
-      val aggs = columns.flatMap(c =>
-        Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
-      val perPart = raw
-        .withColumn("__f", input_file_name())
-        .groupBy(col("__f")).agg(aggs.head, aggs.tail: _*)
-        .collect()
-      val byDir = perPart.groupBy(r => batchDirOf(r.getString(0)))
+      val byDir = rangeSegmentsByDir(raw, columns)
       val adds = entries.map { case (p, oldSt) =>
-        val rows = byDir.getOrElse(normPath(p), Array.empty)
-        val segs = columns.zipWithIndex.flatMap { case (c, i) =>
-          val mns = rows.collect {
-            case r if !r.isNullAt(1 + 2 * i) => r.getDouble(1 + 2 * i) }
-          val mxs = rows.collect {
-            case r if !r.isNullAt(2 + 2 * i) => r.getDouble(2 + 2 * i) }
-          if (mns.isEmpty) None else Some(s"$c;${mns.min};${mxs.max}")
-        }
+        val segs = byDir.getOrElse(normPath(p), Nil)
         // preserve blooms AND other columns' range segments — analyze of
         // column a must not destroy column b's pruning
         val kept = oldSt.toSeq.flatMap(_.split(",")).filter { seg =>
@@ -4240,18 +4095,10 @@ object TxLog {
         val all = segs ++ kept
         p -> (if (all.isEmpty) None else Some(all.mkString(",")))
       }
-      try out = commitWithStats(dir, adds,
-        dvSets = dvM.toMap.toSeq.map { case (p, d) => p -> Some(d) },
-        atVersion = checkV + 1)
-      catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the race") =>
-          if (attempt >= MaxCommitAttempts) throw e
-          raceBackoff(attempt)
-      }
+      commitWithStats(dir, adds,
+        dvSets = snap.dvs.toSeq.map { case (p, d) => p -> Some(d) },
+        atVersion = snap.version + 1)
     }
-    out
   }
 
   /** Drop the whole table — data files and log. (Test/rebuild helper;
@@ -4279,8 +4126,8 @@ object TxLog {
   def cloneShallow(src: String, dst: String, asOf: Int = -1): Int = {
     require(latestVersion(dst) == 0,
       s"txlog: clone target $dst already has a log — clone forks a NEW table")
-    val (entries, dvM, cmb) = resolveFull(src, asOf)
-    require(entries.nonEmpty,
+    val snap = snapshot(src, asOf)
+    require(snap.entries.nonEmpty,
       s"txlog: snapshot of $src at asOf=$asOf holds no files")
     // qualify every referenced path: the clone's manifest lives under a
     // different root, so a relative source path would resolve wrong
@@ -4289,16 +4136,16 @@ object TxLog {
       fsOf(path).makeQualified(path).toString
     }
     commitWithStats(dst,
-      entries.map { case (p, st) => qualify(p) -> st },
-      dvSets = dvM.toMap.toSeq.map { case (p, d) =>
+      snap.entries.map { case (p, st) => qualify(p) -> st },
+      dvSets = snap.dvs.toSeq.map { case (p, d) =>
         qualify(p) -> Some(qualify(d))
       },
-      colMap = cmb.m,
+      colMap = snap.colMap,
       // the addColumn type registry is snapshot state too — a clone of
       // a table with a never-written added column must null-fill it
-      colTypes = cmb.types.toSeq.map { case (p, t) => (p, Some(t)) },
+      colTypes = snap.colTypes.map { case (p, t) => (p, Some(t)) },
       // CHECK constraints are table rules and travel with the fork
-      checkSets = cmb.checks.toSeq.map { case (n, e) => (n, Some(e)) })
+      checkSets = snap.checks.map { case (n, e) => (n, Some(e)) })
   }
 
   def destroy(dir: String): Unit = {

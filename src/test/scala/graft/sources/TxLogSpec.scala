@@ -2070,7 +2070,7 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.destroy(dir)
   }
 
-  /** The twin-path contract: scanEntries == resolveFull, exactly. */
+  /** The twin-path contract: scanEntries == the driver snapshot, exactly. */
   private def entriesViaDriver(dir: String)
       : Set[(String, Option[String], Option[String])] = {
     val dvs = TxLog.liveDvs(dir)
@@ -2162,5 +2162,74 @@ class TxLogSpec extends AnyFunSuite {
       "a toy table must not pay a per-checkpoint twin Spark job")
     TxLog.destroy(d2)
     TxLog.destroy(dir)
+  }
+
+  test("a verb lists _txlog once for its snapshot and once before its claim") {
+    TxLogCountingFs.register(spark)
+    val dir = TxLogCountingFs.uri(freshDir())
+    (0 until 10).foreach { i =>
+      val df = ((i * 10) until (i * 10 + 10)).map(k => (k, k * 10L))
+        .toDF("k", "v")
+      TxLog.commitWithStats(dir, Seq(TxLog.writeBatch(df, dir, s"b$i") ->
+        TxLog.columnStatsMulti(df, Seq("k", "v"))))
+    }
+    def listings(f: => Any): Int = {
+      val before = TxLogCountingFs.listings(dir)
+      f
+      TxLogCountingFs.listings(dir) - before
+    }
+    // one listing yields the latest version, the checkpoint floor and
+    // (for time travel by timestamp) which manifests still exist
+    assert(listings(assert(TxLog.versionAt(dir, Long.MaxValue) === 10)) === 1)
+    assert(listings(TxLog.liveEntries(dir)) === 1)
+    assert(listings(TxLog.read(spark, dir).count()) === 1)
+    // a DML verb: its snapshot, plus the re-check before the claim
+    assert(listings(TxLog.merge(spark, dir, "m1",
+      Seq((5, -5L), (200, 2000L)).toDF("k", "v"), Seq("k"))) <= 2)
+    assert(listings(
+      TxLog.deleteWhereDV(spark, dir, "d1", col("k") === 15)) <= 2)
+    assert(listings(TxLog.updateWhereDV(spark, dir, "u1", col("k") === 25,
+      Seq("v" -> lit(-1L)))) <= 2)
+    val rows = TxLog.read(spark, dir).as[(Int, Long)].collect().toMap
+    assert(rows.size === 100 && rows(5) === -5L && rows(200) === 2000L &&
+      !rows.contains(15) && rows(25) === -1L && rows(26) === 260L)
+    TxLog.destroy(dir)
+  }
+}
+
+/** A `file:`-backed FileSystem under its own scheme that counts the
+  * listings of every table's `_txlog` directory — how [[TxLogSpec]] pins
+  * the number of log resolutions a verb pays. */
+class TxLogCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = TxLogCountingFs.Scheme
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${TxLogCountingFs.Scheme}:///")
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.getName == "_txlog") TxLogCountingFs.count(f.toUri.getPath)
+    super.listStatus(f)
+  }
+}
+
+object TxLogCountingFs {
+  val Scheme = "txlogcountfs"
+  private val counts = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicInteger]()
+
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.$Scheme.impl", classOf[TxLogCountingFs].getName)
+
+  def uri(absolutePath: String): String = s"$Scheme://$absolutePath"
+
+  /** `_txlog` listings of the table at `dir` so far. */
+  def listings(dir: String): Int =
+    Option(counts.get(new org.apache.hadoop.fs.Path(dir, "_txlog")
+      .toUri.getPath)).fold(0)(_.get)
+
+  private def count(logDir: String): Unit = {
+    counts.computeIfAbsent(logDir,
+      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+    ()
   }
 }
